@@ -159,8 +159,9 @@ def audit_table(
         ),
         # coalesce: an EMPTY child table has zero groups, and SUM over
         # zero rows is NULL — the audit must report 0 violations, not
-        # NULL (empty typed tables are a normal input: stored_schemas
-        # stands them in for event families that haven't fired yet)
+        # NULL (empty typed tables are a normal input: load_tables
+        # stands them in, from schemas.TABLE_SCHEMAS, for event
+        # families that haven't fired yet)
         *[
             F.coalesce(F.sum(f"__g_{n}"), F.lit(0)).alias(n)
             for n in fk_names

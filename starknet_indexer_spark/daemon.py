@@ -18,8 +18,10 @@ reorgs are handled out-of-band with ingest.invalidate_from_block before
 resuming the stream, exactly like the reference's invalidate message.
 
 At scale the daemon is the only driver-side loop — every step inside it
-is a distributed job, and the operational tier stays cheap because its
-views are latest-state shaped over block-bucket-pruned reads.
+is a distributed job. The operational tier's views are latest-state
+shaped, but each refresh recomputes them over full history: load_tables
+reads every stored table whole, so refresh cost grows with history, not
+with the batch.
 """
 
 from __future__ import annotations
@@ -38,29 +40,33 @@ from .ingest import (
     DEFAULT_MAX_FILES_PER_TRIGGER,
     checkpoint_marker_ns,
     ingest_micro_batch,
-    stored_schemas,
 )
+from .schemas import TABLE_SCHEMAS
 from .sources.feed import read_feed_stream
 
 ANALYTICAL_REFRESH_S = 300  # reference REFRESH_RATE_ANALYTICAL_VIEWS (.env.mainnet:21)
 
-_schema_cache: dict[int, dict] = {}
-
 
 def load_tables(spark: SparkSession, tables_dir: str) -> dict[str, DataFrame]:
-    """Every stored table under the ingest root; event families that
-    haven't produced rows yet come back as empty DataFrames typed
-    exactly as ingest would write them (ingest.stored_schemas) — so a
-    view joining a present table against an absent one sees consistent
-    key types."""
-    key = id(spark)
-    if key not in _schema_cache:
-        _schema_cache[key] = stored_schemas(spark)
+    """Every stored table under the ingest root, typed by the declared
+    stored layout (``schemas.TABLE_SCHEMAS``). Event families that
+    haven't produced rows yet come back as empty DataFrames, so a view
+    joining a present table against an absent one sees consistent key
+    types. Neither case derives a schema: stand-ins plan nothing, and a
+    present table is read with the declared schema, which skips the
+    footer-sampling job parquet schema inference runs per table.
+
+    A present table's schema equals the declared one by column name and
+    type only: the partition column ``block_bucket`` comes last (the
+    declared envelope has it 7th), and file sources read every column
+    as nullable. Views select columns by name, so neither difference
+    reaches them; the test suite's read-back check compares name->type
+    maps for that reason."""
     out: dict[str, DataFrame] = {}
-    for name, schema in _schema_cache[key].items():
+    for name, schema in TABLE_SCHEMAS.items():
         p = os.path.join(tables_dir, name)
         if os.path.isdir(p):
-            out[name] = spark.read.parquet(p)
+            out[name] = spark.read.schema(schema).parquet(p)
         else:
             out[name] = spark.createDataFrame([], schema)
     return out

@@ -557,44 +557,6 @@ def _family_concurrency_groups() -> dict[str, str]:
     return {et: find(et) for et in EVENT_SELECTORS}
 
 
-def stored_schemas(spark: SparkSession) -> dict[str, "T.StructType"]:
-    """The exact schema of every stored table, derived by planning the
-    decode + stored-shape projection over an empty feed — by
-    construction identical to what ingest_batch writes. Used to stand
-    in empty typed tables for event families that haven't fired yet
-    (the reference CREATEs all tables up front, src/dao.ts:74-84)."""
-    from pyspark.sql import types as T  # local: keep module import surface slim
-
-    empty = spark.createDataFrame([], RAW_SCHEMA)
-    env = empty.select(*_envelope_cols(empty), F.col("data"))
-    out: dict[str, T.StructType] = {}
-    for event_type in EVENT_PARSERS:
-        decoded = decode_events(env, event_type)
-        table, stored = to_stored(event_type, decoded)
-        out[table] = stored.schema
-        for side_name, builder in SIDE_TABLES.get(event_type, ()):
-            out[side_name] = builder(decoded).schema
-    out["blocks"] = T.StructType(
-        [
-            T.StructField("number", T.IntegerType()),
-            T.StructField("hash", T.StringType()),
-            T.StructField("time", T.TimestampType()),
-            T.StructField("block_bucket", T.IntegerType()),
-        ]
-    )
-    out["pool_keys"] = T.StructType(
-        [
-            T.StructField("key_hash", T.StringType()),
-            T.StructField("token0", T.StringType()),
-            T.StructField("token1", T.StringType()),
-            T.StructField("fee", T.DecimalType(38, 0)),
-            T.StructField("tick_spacing", T.IntegerType()),
-            T.StructField("extension", T.StringType()),
-        ]
-    )
-    return out
-
-
 def _table_dir(tables_dir: str, name: str) -> str:
     return os.path.join(tables_dir, name)
 

@@ -228,7 +228,14 @@ def bloom_probe_hits(
     set, under either formulation; a NULL item hashes to NULL buckets,
     which the old path's left joins never matched — replicated here by
     coalescing NULL buckets onto a sentinel position that is never
-    set."""
+    set. A NULL item on the BUILD side yields a NULL ``bit`` row, which
+    sets nothing under either path; the bitset collect drops it.
+
+    With ``assume_distinct_probes``, building the bitset runs a Spark
+    job (the collect of ``bits``) when this function is called, not
+    when the returned DataFrame is evaluated, and raises
+    ``ValueError`` when ``bits`` holds more than ``m_bits`` set
+    positions (not a set-bit relation built with these parameters)."""
     cols = probes.columns
     if assume_distinct_probes:
         import numpy as np
@@ -239,11 +246,16 @@ def bloom_probe_hits(
         # / 1 MiB max for the decontamination filter) — NOT by corpus
         # size; the same boundedness argument as the k-means centroid
         # collects (annkernels._collect_matrix)
-        bit_rows = bits.toPandas()["bit"].to_numpy(dtype=np.int64)
-        assert len(bit_rows) <= m_bits, (
-            f"bloom bits relation has {len(bit_rows)} rows > m_bits="
-            f"{m_bits}: not a valid set-bit relation"
+        bit_rows = (
+            bits.filter(F.col("bit").isNotNull())
+            .toPandas()["bit"]
+            .to_numpy(dtype=np.int64)
         )
+        if len(bit_rows) > m_bits:
+            raise ValueError(
+                f"bloom bits relation has {len(bit_rows)} rows > m_bits="
+                f"{m_bits}: not a valid set-bit relation"
+            )
         # index m_bits is the never-set sentinel for NULL buckets
         bitset = np.zeros(m_bits + 1, dtype=bool)
         if len(bit_rows):

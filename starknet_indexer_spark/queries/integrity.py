@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load
-from ..constraints import audit_table  # noqa: F401  (validate_stored path; kept for API)
 from .registry import register
 
 _PKS = [

@@ -430,10 +430,10 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: bump when the IVF-PQ or plain-PQ training derivation changes
 #: (invalidates both cached codebook artifact families)
 # v2 (r13): cells + M codebooks consolidated into ONE `books` parquet
-# (a `book` column: -1 = coarse cells, m = subspace m) — the search
-# path paid 5 separate listing+footer+read jobs per query build, plus
-# re-reads under every broadcast (VERDICT r12 item #4); now one read +
-# one control-plane collect feeds everything as local relations
+# (a `book` column: -1 = coarse cells, m = subspace m) — the v1 layout
+# paid a listing+footer+read job per book file (VERDICT r12 item #4);
+# now every per-book view is a lazy filter over that one parquet, so
+# each consumer still scans it (see _split_books)
 IVFPQ_ARTIFACT_VERSION = "v2"
 
 
@@ -544,12 +544,14 @@ def ensure_pq_codebooks(spark: SparkSession, sf_dir: str) -> str:
 def _split_books(
     spark: SparkSession, path: str, n_books: int, with_cells: bool = False
 ):
-    """ONE read + ONE control-plane collect of the combined codebook
-    parquet (M*K + IVF_CELLS rows — model-sized constants, the
-    annkernels boundedness argument), split driver-side into LOCAL
-    per-book relations. Downstream consumers (pq_kernel's collects,
-    the ADC LUT broadcasts) then touch no files at all — the v1
-    layout paid a listing+footer+read job per book per consumer.
+    """Per-book views of the combined codebook parquet (M*K +
+    IVF_CELLS rows — model-sized constants): one lazy
+    ``filter(book == b)`` per book over a single ``spark.read``.
+    Nothing is collected here, so every downstream consumer
+    (pq_kernel's collects, the ADC LUT broadcasts) re-scans the
+    parquet when it runs; what v2 saves over v1 is the per-book
+    file listing and footer read. Splitting driver-side into local
+    ``createDataFrame`` relations was measured 2-2.5x slower (r13).
     Schema (and so every dtype the LUT map keys / kernel matrices
     see) is preserved verbatim from the parquet."""
     df = spark.read.parquet(path)

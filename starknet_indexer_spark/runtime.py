@@ -16,10 +16,11 @@ V15, V11 reads V2, TWAMM/limit-order states read V1) is wired here —
 upstream results are computed once and fed to dependents, exactly the
 matview-reads-matview graph of the reference.
 
-At 100 TB the operational tier must stay cheap: every operational view
-is latest-state-shaped (argmax per key + bounded joins), so pass
-pre-pruned DataFrames in ``tables`` (block-bucketed head partitions,
-ingest.py) and the recompute touches only the head of history.
+Every operational view is latest-state-shaped (argmax per key +
+bounded joins), but an operational refresh recomputes each view from
+whatever ``tables`` holds and prunes nothing. The daemon passes ``daemon.load_tables``,
+which reads every stored table whole, so each operational refresh
+recomputes over full history and its cost grows with history.
 """
 
 from __future__ import annotations

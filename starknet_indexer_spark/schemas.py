@@ -1,281 +1,249 @@
-"""Explicit StructTypes for the Ekubo event-sourced tables.
+"""Explicit StructTypes for every table ingest stores.
 
-Schema-on-write, no inference (the reference's DDL is fixed and
-code-defined — src/dao.ts:86-1541). Envelope columns are denormalized
-onto every fact table instead of a separate ``event_keys`` table: at
-100 TB a fact-to-envelope join on every query is a pointless shuffle;
-carrying (event_id, block_number) costs ~16 bytes/row and makes every
-fact table self-contained and partition-prunable by block range.
+Schema-on-write, declared once: the reference's DDL is fixed and
+code-defined (src/dao.ts:86-1541) and every table is created up front
+(src/dao.ts:74-84). ``TABLE_SCHEMAS`` is the exact layout
+``ingest.ingest_batch`` writes, nullability included, so
+``daemon.load_tables`` reads stored tables with it and stands in empty
+typed tables for event families that have not fired yet, without
+deriving any schema. The test suite pins it against the decode +
+stored-shape projection it must equal.
 
-Width policy (SURVEY.md §1.2): DECIMAL(38,0) for amounts/addresses
-(fixture-bounded < 2^126), INT for ticks, TIMESTAMP for block time.
+Envelope columns are denormalized onto every fact table instead of a
+separate ``event_keys`` table: a fact-to-envelope join on every query
+is a pointless shuffle, while carrying (event_id, block_number) costs
+~16 bytes/row and makes every fact table self-contained. Every stored
+table is partitioned by ``block_bucket = block_number // 1000``
+(ingest.BLOCK_BUCKET_SIZE), the unit of reorg retraction.
+
+Width policy (SURVEY.md §1.2): felts that name something (addresses,
+hashes, pool key hashes, proposal ids) are canonical 0x-hex STRINGs;
+amounts, sqrt ratios and sale rates are DECIMAL(38,0)
+(fixture-bounded < 2^126); ticks are INT; block time is TIMESTAMP. The
+per-table declarations below are the authority where a column departs
+from this (position salts are DECIMAL, TWAMM and limit-order salts are
+hex STRINGs, as decode produces them).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
+STR = T.StringType()
 DEC = T.DecimalType(38, 0)
+INT = T.IntegerType()
+LONG = T.LongType()
+TS = T.TimestampType()
+
+
+def _f(name: str, dtype: T.DataType, nullable: bool = True) -> T.StructField:
+    return T.StructField(name, dtype, nullable)
 
 
 def _envelope() -> list[T.StructField]:
     # reference event_keys: src/dao.ts:121-132 (denormalized here)
     return [
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("transaction_hash", DEC, True),
-        T.StructField("block_number", T.IntegerType(), False),
-        T.StructField("transaction_index", T.ShortType(), True),
-        T.StructField("event_index", T.ShortType(), True),
-        T.StructField("emitter", DEC, True),
+        _f("event_id", LONG, False),
+        _f("transaction_hash", STR),
+        _f("block_number", INT, False),
+        _f("transaction_index", T.ShortType(), False),
+        _f("event_index", T.ShortType(), False),
+        _f("emitter", STR),
+        _f("block_bucket", INT),
     ]
 
 
-def _fact(*payload: T.StructField) -> T.StructType:
-    return T.StructType(_envelope() + list(payload))
+def _fact(*payload: tuple) -> T.StructType:
+    """Envelope + payload columns, each ``(name, type)`` or
+    ``(name, type, nullable)``."""
+    return T.StructType(_envelope() + [_f(*p) for p in payload])
 
 
-BLOCKS = T.StructType(
-    [
-        T.StructField("number", T.IntegerType(), False),
-        T.StructField("hash", DEC, True),
-        T.StructField("time", T.TimestampType(), False),
-    ]
-)  # src/dao.ts:96-105
+def _side(*payload: tuple) -> T.StructType:
+    """A governor child table: keyed by proposal id, with the block
+    columns reorg invalidation needs."""
+    return T.StructType(
+        [_f("proposal_id", STR), _f("block_number", INT, False), _f("block_bucket", INT)]
+        + [_f(*p) for p in payload]
+    )
 
-POOL_KEYS = T.StructType(
-    [
-        T.StructField("key_hash", DEC, False),
-        T.StructField("token0", DEC, False),
-        T.StructField("token1", DEC, False),
-        T.StructField("fee", DEC, False),
-        T.StructField("tick_spacing", T.IntegerType(), False),
-        T.StructField("extension", DEC, False),
-    ]
-)  # src/dao.ts:107-119
 
-SWAPS = _fact(
-    T.StructField("locker", DEC, True),
-    T.StructField("pool_key_hash", DEC, False),
-    T.StructField("delta0", DEC, True),
-    T.StructField("delta1", DEC, True),
-    T.StructField("sqrt_ratio_after", DEC, True),
-    T.StructField("tick_after", T.IntegerType(), True),
-    T.StructField("liquidity_after", DEC, True),
-)  # src/dao.ts:233-248
+_POSITION_FEES = _fact(
+    ("pool_key_hash", STR),
+    ("owner", STR),
+    ("salt", DEC),
+    ("lower_bound", INT),
+    ("upper_bound", INT),
+    ("delta0", DEC),
+    ("delta1", DEC),
+)  # src/dao.ts:165-180, same shape as protocol_fees_paid (193-208)
 
-POSITION_UPDATES = _fact(
-    T.StructField("locker", DEC, True),
-    T.StructField("pool_key_hash", DEC, False),
-    T.StructField("salt", DEC, True),
-    T.StructField("lower_bound", T.IntegerType(), True),
-    T.StructField("upper_bound", T.IntegerType(), True),
-    T.StructField("liquidity_delta", DEC, True),
-    T.StructField("delta0", DEC, True),
-    T.StructField("delta1", DEC, True),
-)  # src/dao.ts:145-163
-
-POSITION_FEES_COLLECTED = _fact(
-    T.StructField("pool_key_hash", DEC, False),
-    T.StructField("owner", DEC, True),
-    T.StructField("salt", DEC, True),
-    T.StructField("lower_bound", T.IntegerType(), True),
-    T.StructField("upper_bound", T.IntegerType(), True),
-    T.StructField("delta0", DEC, True),
-    T.StructField("delta1", DEC, True),
-)  # src/dao.ts:165-180
-
-PROTOCOL_FEES_PAID = POSITION_FEES_COLLECTED  # same shape, src/dao.ts:193-208
-
-PROTOCOL_FEES_WITHDRAWN = _fact(
-    T.StructField("recipient", DEC, True),
-    T.StructField("token", DEC, True),
-    T.StructField("amount", DEC, True),
-)  # src/dao.ts:183-190
-
-FEES_ACCUMULATED = _fact(
-    T.StructField("pool_key_hash", DEC, False),
-    T.StructField("amount0", DEC, True),
-    T.StructField("amount1", DEC, True),
-)  # src/dao.ts:210-219
-
-POOL_INITIALIZATIONS = _fact(
-    T.StructField("pool_key_hash", DEC, False),
-    T.StructField("tick", T.IntegerType(), True),
-    T.StructField("sqrt_ratio", DEC, True),
-)  # src/dao.ts:221-230
-
-POSITION_TRANSFERS = _fact(
-    T.StructField("token_id", T.LongType(), True),
-    T.StructField("from_address", DEC, True),
-    T.StructField("to_address", DEC, True),
-)  # src/dao.ts:134-143
-
-POSITION_MINTED_WITH_REFERRER = _fact(
-    T.StructField("token_id", T.LongType(), True),
-    T.StructField("referrer", DEC, True),
-)  # src/dao.ts:250-257
-
-TWAMM_ORDER_UPDATES = _fact(
-    T.StructField("key_hash", DEC, False),
-    T.StructField("owner", DEC, True),
-    T.StructField("salt", DEC, True),
-    T.StructField("sale_rate_delta0", DEC, True),
-    T.StructField("sale_rate_delta1", DEC, True),
-    T.StructField("start_time", T.TimestampType(), True),
-    T.StructField("end_time", T.TimestampType(), True),
-)  # src/dao.ts:650-667
-
-TWAMM_PROCEEDS_WITHDRAWALS = _fact(
-    T.StructField("key_hash", DEC, False),
-    T.StructField("owner", DEC, True),
-    T.StructField("salt", DEC, True),
-    T.StructField("amount0", DEC, True),
-    T.StructField("amount1", DEC, True),
-    T.StructField("start_time", T.TimestampType(), True),
-    T.StructField("end_time", T.TimestampType(), True),
-)  # src/dao.ts:669-686
-
-TWAMM_VIRTUAL_ORDER_EXECUTIONS = _fact(
-    T.StructField("key_hash", DEC, False),
-    T.StructField("token0_sale_rate", DEC, True),
-    T.StructField("token1_sale_rate", DEC, True),
-    T.StructField("delta0", DEC, True),
-    T.StructField("delta1", DEC, True),
-)  # src/dao.ts:688-699
-
-ORACLE_SNAPSHOTS = _fact(
-    T.StructField("key_hash", DEC, False),
-    T.StructField("token0", DEC, True),
-    T.StructField("token1", DEC, True),
-    T.StructField("index", T.LongType(), True),
-    T.StructField("snapshot_block_timestamp", T.LongType(), True),
-    T.StructField("snapshot_tick_cumulative", DEC, True),
-)  # src/dao.ts:701-713
-
-LIMIT_ORDER_PLACED = _fact(
-    T.StructField("key_hash", DEC, False),
-    T.StructField("owner", DEC, True),
-    T.StructField("salt", DEC, True),
-    T.StructField("token0", DEC, True),
-    T.StructField("token1", DEC, True),
-    T.StructField("tick", T.IntegerType(), True),
-    T.StructField("liquidity", DEC, True),
-    T.StructField("amount", DEC, True),
-)  # src/dao.ts:715-730
-
-LIMIT_ORDER_CLOSED = _fact(
-    T.StructField("key_hash", DEC, False),
-    T.StructField("owner", DEC, True),
-    T.StructField("salt", DEC, True),
-    T.StructField("token0", DEC, True),
-    T.StructField("token1", DEC, True),
-    T.StructField("tick", T.IntegerType(), True),
-    T.StructField("amount0", DEC, True),
-    T.StructField("amount1", DEC, True),
-)  # src/dao.ts:732-747
-
-LIQUIDITY_UPDATED = _fact(
-    T.StructField("pool_key_hash", DEC, False),
-    T.StructField("sender", DEC, True),
-    T.StructField("liquidity_factor", DEC, True),
-    T.StructField("shares", DEC, True),
-    T.StructField("amount0", DEC, True),
-    T.StructField("amount1", DEC, True),
-    T.StructField("protocol_fees0", DEC, True),
-    T.StructField("protocol_fees1", DEC, True),
-)  # src/dao.ts:749-763
-
-STAKER_STAKED = _fact(
-    T.StructField("from_address", DEC, True),
-    T.StructField("amount", DEC, True),
-    T.StructField("delegate", DEC, True),
-)  # src/dao.ts:283-292
-
-STAKER_WITHDRAWN = _fact(
-    T.StructField("from_address", DEC, True),
-    T.StructField("amount", DEC, True),
-    T.StructField("recipient", DEC, True),
-    T.StructField("delegate", DEC, True),
-)  # src/dao.ts:294-304
-
-TOKEN_REGISTRATIONS = _fact(
-    T.StructField("address", DEC, True),
-    T.StructField("name", DEC, True),
-    T.StructField("symbol", DEC, True),
-    T.StructField("decimals", T.IntegerType(), True),
-    T.StructField("total_supply", DEC, True),
-)  # src/dao.ts:259-269
-
-TOKEN_REGISTRATIONS_V3 = _fact(
-    T.StructField("address", DEC, True),
-    T.StructField("name", T.StringType(), True),
-    T.StructField("symbol", T.StringType(), True),
-    T.StructField("decimals", T.IntegerType(), True),
-    T.StructField("total_supply", DEC, True),
-)  # src/dao.ts:271-281
-
-GOVERNOR_RECONFIGURED = _fact(
-    T.StructField("version", T.LongType(), True),
-    T.StructField("voting_start_delay", T.LongType(), True),
-    T.StructField("voting_period", T.LongType(), True),
-    T.StructField("voting_weight_smoothing_duration", T.LongType(), True),
-    T.StructField("quorum", DEC, True),
-    T.StructField("proposal_creation_threshold", DEC, True),
-    T.StructField("execution_delay", T.LongType(), True),
-    T.StructField("execution_window", T.LongType(), True),
-)  # src/dao.ts:306-320
-
-GOVERNOR_PROPOSED = _fact(
-    T.StructField("id", DEC, True),
-    T.StructField("proposer", DEC, True),
-    T.StructField("config_version", T.LongType(), True),
-)  # src/dao.ts:322-330
-
-GOVERNOR_VOTED = _fact(
-    T.StructField("id", DEC, True),
-    T.StructField("voter", DEC, True),
-    T.StructField("weight", DEC, True),
-    T.StructField("yea", T.BooleanType(), True),
-)  # src/dao.ts:350-358
-
-GOVERNOR_CANCELED = _fact(T.StructField("id", DEC, True))  # src/dao.ts:342-348
-
-GOVERNOR_EXECUTED = _fact(T.StructField("id", DEC, True))  # src/dao.ts:360-366
-
-GOVERNOR_PROPOSAL_DESCRIBED = _fact(
-    T.StructField("id", DEC, True),
-    T.StructField("description", T.StringType(), True),
-)  # src/dao.ts:376-382
-
-STAKER_REWARD_TABLES = {}
+_TWAMM_ORDER = [("key_hash", STR), ("owner", STR), ("salt", STR)]
+_LIMIT_ORDER = _TWAMM_ORDER + [("token0", STR), ("token1", STR), ("tick", INT)]
+_GOVERNOR_ID = ("id", STR)
 
 TABLE_SCHEMAS: dict[str, T.StructType] = {
-    "blocks": BLOCKS,
-    "pool_keys": POOL_KEYS,
-    "swaps": SWAPS,
-    "position_updates": POSITION_UPDATES,
-    "position_fees_collected": POSITION_FEES_COLLECTED,
-    "protocol_fees_paid": PROTOCOL_FEES_PAID,
-    "protocol_fees_withdrawn": PROTOCOL_FEES_WITHDRAWN,
-    "fees_accumulated": FEES_ACCUMULATED,
-    "pool_initializations": POOL_INITIALIZATIONS,
-    "position_transfers": POSITION_TRANSFERS,
-    "position_minted_with_referrer": POSITION_MINTED_WITH_REFERRER,
-    "twamm_order_updates": TWAMM_ORDER_UPDATES,
-    "twamm_proceeds_withdrawals": TWAMM_PROCEEDS_WITHDRAWALS,
-    "twamm_virtual_order_executions": TWAMM_VIRTUAL_ORDER_EXECUTIONS,
-    "oracle_snapshots": ORACLE_SNAPSHOTS,
-    "limit_order_placed": LIMIT_ORDER_PLACED,
-    "limit_order_closed": LIMIT_ORDER_CLOSED,
-    "liquidity_updated": LIQUIDITY_UPDATED,
-    "staker_staked": STAKER_STAKED,
-    "staker_withdrawn": STAKER_WITHDRAWN,
-    "token_registrations": TOKEN_REGISTRATIONS,
-    "token_registrations_v3": TOKEN_REGISTRATIONS_V3,
-    "governor_reconfigured": GOVERNOR_RECONFIGURED,
-    "governor_proposed": GOVERNOR_PROPOSED,
-    "governor_voted": GOVERNOR_VOTED,
-    "governor_canceled": GOVERNOR_CANCELED,
-    "governor_executed": GOVERNOR_EXECUTED,
-    "governor_proposal_described": GOVERNOR_PROPOSAL_DESCRIBED,
+    "blocks": T.StructType(
+        [_f("number", INT), _f("hash", STR), _f("time", TS), _f("block_bucket", INT)]
+    ),  # src/dao.ts:96-105
+    "pool_keys": T.StructType(
+        [
+            _f("key_hash", STR),
+            _f("token0", STR),
+            _f("token1", STR),
+            _f("fee", DEC),
+            _f("tick_spacing", INT),
+            _f("extension", STR),
+        ]
+    ),  # src/dao.ts:107-119
+    "position_updates": _fact(
+        ("locker", STR),
+        ("pool_key_hash", STR),
+        ("salt", DEC),
+        ("lower_bound", INT),
+        ("upper_bound", INT),
+        ("liquidity_delta", DEC),
+        ("delta0", DEC),
+        ("delta1", DEC),
+    ),  # src/dao.ts:145-163
+    "position_fees_collected": _POSITION_FEES,
+    "protocol_fees_withdrawn": _fact(
+        ("recipient", STR), ("token", STR), ("amount", DEC)
+    ),  # src/dao.ts:183-190
+    "swaps": _fact(
+        ("locker", STR),
+        ("pool_key_hash", STR),
+        ("delta0", DEC),
+        ("delta1", DEC),
+        ("sqrt_ratio_after", DEC),
+        ("tick_after", INT),
+        ("liquidity_after", DEC),
+    ),  # src/dao.ts:233-248
+    "pool_initializations": _fact(
+        ("pool_key_hash", STR), ("tick", INT), ("sqrt_ratio", DEC)
+    ),  # src/dao.ts:221-230
+    "protocol_fees_paid": _POSITION_FEES,
+    "fees_accumulated": _fact(
+        ("pool_key_hash", STR), ("amount0", DEC), ("amount1", DEC)
+    ),  # src/dao.ts:210-219
+    # the pre-referrer mint event, stored in its decoded shape
+    "legacy_position_minted": _fact(
+        ("id", LONG),
+        (
+            "pool_key",
+            T.StructType(
+                [
+                    _f("token0", STR),
+                    _f("token1", STR),
+                    _f("fee", DEC),
+                    _f("tick_spacing", DEC),
+                    _f("extension", STR),
+                ]
+            ),
+            False,
+        ),
+        ("bounds", T.StructType([_f("lower", DEC), _f("upper", DEC)]), False),
+        ("referrer", STR),
+    ),
+    "position_minted_with_referrer": _fact(
+        ("token_id", LONG), ("referrer", STR)
+    ),  # src/dao.ts:250-257
+    "position_transfers": _fact(
+        ("token_id", DEC), ("from_address", STR), ("to_address", STR)
+    ),  # src/dao.ts:134-143
+    "token_registrations": _fact(
+        ("address", STR),
+        ("name", STR),
+        ("symbol", STR),
+        ("decimals", INT),
+        ("total_supply", DEC),
+    ),  # src/dao.ts:259-269
+    "token_registrations_v3": _fact(
+        ("address", STR),
+        ("name", STR),
+        ("symbol", STR),
+        ("decimals", INT),
+        ("total_supply", DEC),
+    ),  # src/dao.ts:271-281
+    "twamm_order_updates": _fact(
+        *_TWAMM_ORDER,
+        ("sale_rate_delta0", DEC),
+        ("sale_rate_delta1", DEC),
+        ("start_time", TS),
+        ("end_time", TS),
+    ),  # src/dao.ts:650-667
+    "twamm_proceeds_withdrawals": _fact(
+        *_TWAMM_ORDER,
+        ("amount0", DEC),
+        ("amount1", DEC),
+        ("start_time", TS),
+        ("end_time", TS),
+    ),  # src/dao.ts:669-686
+    "twamm_virtual_order_executions": _fact(
+        ("key_hash", STR),
+        ("token0_sale_rate", DEC),
+        ("token1_sale_rate", DEC),
+        ("delta0", DEC),
+        ("delta1", DEC),
+    ),  # src/dao.ts:688-699
+    "staker_staked": _fact(
+        ("from_address", STR), ("amount", DEC), ("delegate", STR)
+    ),  # src/dao.ts:283-292
+    "staker_withdrawn": _fact(
+        ("from_address", STR), ("amount", DEC), ("recipient", STR), ("delegate", STR)
+    ),  # src/dao.ts:294-304
+    "oracle_snapshots": _fact(
+        ("key_hash", STR),
+        ("token0", STR),
+        ("token1", STR),
+        ("index", LONG),
+        ("snapshot_block_timestamp", LONG),
+        ("snapshot_tick_cumulative", DEC),
+    ),  # src/dao.ts:701-713
+    "limit_order_placed": _fact(
+        *_LIMIT_ORDER, ("liquidity", DEC), ("amount", DEC)
+    ),  # src/dao.ts:715-730
+    "limit_order_closed": _fact(
+        *_LIMIT_ORDER, ("amount0", DEC), ("amount1", DEC)
+    ),  # src/dao.ts:732-747
+    "liquidity_updated": _fact(
+        ("pool_key_hash", STR),
+        ("sender", STR),
+        ("liquidity_factor", DEC),
+        ("shares", DEC),
+        ("amount0", DEC),
+        ("amount1", DEC),
+        ("protocol_fees0", DEC),
+        ("protocol_fees1", DEC),
+    ),  # src/dao.ts:749-763
+    "governor_proposed": _fact(
+        _GOVERNOR_ID, ("proposer", STR), ("config_version", LONG)
+    ),  # src/dao.ts:322-330
+    "governor_proposed_calls": _side(
+        ("call_index", INT, False),
+        ("to", STR),
+        ("selector", STR),
+        ("calldata", T.ArrayType(STR)),
+    ),  # src/dao.ts:330-340
+    "governor_voted": _fact(
+        _GOVERNOR_ID, ("voter", STR), ("weight", DEC), ("yea", T.BooleanType())
+    ),  # src/dao.ts:350-358
+    "governor_canceled": _fact(_GOVERNOR_ID),  # src/dao.ts:342-348
+    "governor_executed": _fact(_GOVERNOR_ID),  # src/dao.ts:360-366
+    "governor_executed_results": _side(
+        ("result_index", INT, False), ("results", T.ArrayType(STR))
+    ),  # src/dao.ts:360-374
+    "governor_proposal_described": _fact(
+        _GOVERNOR_ID, ("description", STR)
+    ),  # src/dao.ts:376-382
+    "governor_reconfigured": _fact(
+        ("version", LONG),
+        ("voting_start_delay", LONG),
+        ("voting_period", LONG),
+        ("voting_weight_smoothing_duration", LONG),
+        ("quorum", DEC),
+        ("proposal_creation_threshold", DEC),
+        ("execution_delay", LONG),
+        ("execution_window", LONG),
+    ),  # src/dao.ts:306-320
 }

@@ -116,6 +116,34 @@ def test_every_event_family_landed(ingested):
     assert expected <= set(tables), sorted(expected - set(tables))
 
 
+def test_stored_tables_read_back_as_declared(ingested):
+    """What ingest wrote reads back with the declared column names and
+    types. Order and nullability are not compared: partition discovery
+    puts ``block_bucket`` last, and file sources read every column as
+    nullable (daemon.load_tables' docstring)."""
+    from starknet_indexer_spark.schemas import TABLE_SCHEMAS
+
+    _, tables = ingested
+    assert set(tables) <= set(TABLE_SCHEMAS), sorted(set(tables) - set(TABLE_SCHEMAS))
+    for name, df in tables.items():
+        got = {f.name: f.dataType for f in df.schema.fields}
+        want = {f.name: f.dataType for f in TABLE_SCHEMAS[name].fields}
+        assert got == want, name
+
+
+def test_load_tables_reads_what_ingest_wrote(spark, ingested):
+    """Reading with the declared schema instead of inferring it keeps
+    every column and every row of each present table."""
+    from starknet_indexer_spark.daemon import load_tables
+
+    tdir, tables = ingested
+    loaded = load_tables(spark, tdir)
+    for name, df in tables.items():
+        got = loaded[name].select(*df.columns)
+        assert got.schema == df.schema, name
+        assert got.count() == df.count() and not got.exceptAll(df).take(1), name
+
+
 def test_operational_tier_runs(spark, ingested, tmp_path):
     tdir, tables = ingested
     out = str(tmp_path / "op")

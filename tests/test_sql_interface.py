@@ -171,7 +171,7 @@ class TestConstraints:
 
 class TestAuditEmptyTables:
     def test_empty_child_reports_zero_not_null(self, spark):
-        """An EMPTY child table (normal input: stored_schemas stands in
+        """An EMPTY child table (normal input: load_tables stands in
         empty typed tables for unfired event families) must report 0
         violations for every constraint — the fused single-pass
         aggregate previously returned NULL for the fk_ columns."""
