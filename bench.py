@@ -520,16 +520,7 @@ def main(diff_against: str | None = None) -> int:
     # geomean in the improving direction. Read the prior record before
     # this run overwrites it; best-effort (a missing/corrupt file just
     # protects nothing).
-    protected: set = set()
-    try:
-        with open(detail_path) as fh:
-            prev_q = json.load(fh).get("queries", {})
-        for name, now_s in timings.items():
-            prev_s = prev_q.get(name)
-            if prev_s and abs(now_s / prev_s - 1.0) > 0.25:
-                protected.add(name)
-    except (OSError, ValueError, ZeroDivisionError):
-        pass
+    protected = moved_vs_prior(detail_path, timings)
     try:
         with open(detail_path, "w") as fh:
             json.dump(out, fh, indent=1, sort_keys=True)
@@ -577,6 +568,30 @@ def main(diff_against: str | None = None) -> int:
     print(compact_stdout_line(compact, timings, protected=protected))
     # propagate the regression gate (same contract as --compare)
     return diff_rc
+
+
+def moved_vs_prior(detail_path: str, timings: dict) -> set:
+    """Names in ``timings`` whose steady time moved by more than 25%
+    against the ``queries`` map of the prior record at
+    ``detail_path``. Best-effort: a missing or unparsable
+    file, a ``queries`` that is not a map, and any prior entry that is
+    not a positive number all protect nothing."""
+    try:
+        with open(detail_path) as fh:
+            prev = json.load(fh)
+    except (OSError, ValueError):
+        return set()
+    prev_q = prev.get("queries") if isinstance(prev, dict) else None
+    if not isinstance(prev_q, dict):
+        return set()
+    moved = set()
+    for name, now_s in timings.items():
+        prev_s = prev_q.get(name)
+        if isinstance(prev_s, bool) or not isinstance(prev_s, (int, float)):
+            continue
+        if prev_s > 0 and abs(now_s / prev_s - 1.0) > 0.25:
+            moved.add(name)
+    return moved
 
 
 def compact_stdout_line(compact: dict, timings: dict, budget: int = 1800,

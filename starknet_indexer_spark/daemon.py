@@ -42,6 +42,7 @@ from .ingest import (
     ingest_micro_batch,
 )
 from .schemas import TABLE_SCHEMAS
+from .session import empty_frame
 from .sources.feed import read_feed_stream
 
 ANALYTICAL_REFRESH_S = 300  # reference REFRESH_RATE_ANALYTICAL_VIEWS (.env.mainnet:21)
@@ -50,11 +51,16 @@ ANALYTICAL_REFRESH_S = 300  # reference REFRESH_RATE_ANALYTICAL_VIEWS (.env.main
 def load_tables(spark: SparkSession, tables_dir: str) -> dict[str, DataFrame]:
     """Every stored table under the ingest root, typed by the declared
     stored layout (``schemas.TABLE_SCHEMAS``). Event families that
-    haven't produced rows yet come back as empty DataFrames, so a view
-    joining a present table against an absent one sees consistent key
-    types. Neither case derives a schema: stand-ins plan nothing, and a
-    present table is read with the declared schema, which skips the
-    footer-sampling job parquet schema inference runs per table.
+    haven't produced rows yet come back as typed empty stand-ins
+    (``session.empty_frame``), so a view joining a present table
+    against an absent one sees consistent key types. A stand-in folds
+    to an empty relation at plan time: a view over absent families only
+    computes nothing (collecting it runs no Spark job), an inner join
+    with one is empty, and a union or outer join drops that side. A
+    present table is read whole, so views over it recompute its full
+    history. Neither case derives a schema: a present table is read
+    with the declared schema, which skips the footer-sampling job
+    parquet schema inference runs per table.
 
     A present table's schema equals the declared one by column name and
     type only: the partition column ``block_bucket`` comes last (the
@@ -68,7 +74,7 @@ def load_tables(spark: SparkSession, tables_dir: str) -> dict[str, DataFrame]:
         if os.path.isdir(p):
             out[name] = spark.read.schema(schema).parquet(p)
         else:
-            out[name] = spark.createDataFrame([], schema)
+            out[name] = empty_frame(spark, schema)
     return out
 
 

@@ -1095,17 +1095,7 @@ FROM integral i JOIN pt ON i.proposal_id = pt.proposal_id
 )
 def v12_voting_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = ekubo_tables(spark, sf_dir)
-    # materialize=False (r13, closing VERDICT r12 item #1b): the r12
-    # opt-in was kept on plan evidence with a steal-window wash, and
-    # the driver measured it −17% at sf0.1. A clean zero-steal
-    # interleave this round confirms the driver: materialized 1.98 /
-    # 1.72 s vs plain 1.98 / 1.49 s median steady (and lower cold) —
-    # the three checkpoint materializations cost more than the
-    # re-derived sentinel leg at this SF. The view keeps the
-    # `materialize` flag for deployment shapes (fact-sized deltas
-    # decoded twice is the 100 TB cost the flag removes); the
-    # registered bench query no longer opts in.
-    df = VIEWS["proposal_delegate_voting_weights"](t, materialize=False)
+    df = VIEWS["proposal_delegate_voting_weights"](t)
     return df.select(
         F.col("proposal_id").cast("bigint").alias("proposal_id"),
         F.col("delegate").cast("bigint").alias("delegate"),

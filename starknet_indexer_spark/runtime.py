@@ -20,7 +20,11 @@ Every operational view is latest-state-shaped (argmax per key +
 bounded joins), but an operational refresh recomputes each view from
 whatever ``tables`` holds and prunes nothing. The daemon passes ``daemon.load_tables``,
 which reads every stored table whole, so each operational refresh
-recomputes over full history and its cost grows with history.
+recomputes over full history and its cost grows with history. Event
+families that have not fired are empty stand-ins that fold at plan
+time: a view over absent families only computes nothing, so its
+refresh costs just the one-task write of its empty output, and a view
+joining one pays only for its present inputs.
 """
 
 from __future__ import annotations

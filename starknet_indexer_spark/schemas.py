@@ -6,7 +6,10 @@ code-defined (src/dao.ts:86-1541) and every table is created up front
 ``ingest.ingest_batch`` writes, nullability included, so
 ``daemon.load_tables`` reads stored tables with it and stands in empty
 typed tables for event families that have not fired yet, without
-deriving any schema. The test suite pins it against the decode +
+deriving any schema. The stand-ins fold to empty relations at plan
+time, so views over families that have not fired compute nothing,
+much as the reference's up-front empty tables cost a matview refresh
+nothing. The test suite pins it against the decode +
 stored-shape projection it must equal.
 
 Envelope columns are denormalized onto every fact table instead of a

@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def default_parallelism() -> int:
@@ -59,3 +61,21 @@ def get_spark(app_name: str = "starknet_indexer_spark", **overrides: str) -> Spa
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """A typed empty DataFrame that the optimizer knows is empty.
+
+    ``schema`` is a ``StructType`` or a DDL string; the result's schema
+    is exactly what ``createDataFrame([], schema)`` gives, nullability
+    included. Classic ``createDataFrame`` always builds a ``LogicalRDD``
+    (here over ``default.parallelism`` empty partitions), which Catalyst
+    cannot see into, so every plan over it keeps its scan, shuffle,
+    aggregate and join stages and runs them as Spark jobs. The false
+    filter fixes that: ``PruneFilters`` turns it into an empty
+    ``LocalRelation`` with the same attributes, and
+    ``PropagateEmptyRelation`` then folds aggregates, inner joins and
+    unions over it (an outer join with an empty side becomes a
+    projection with nulls), so a plan that reads only empty inputs runs
+    no job."""
+    return spark.createDataFrame([], schema).where(F.lit(False))

@@ -44,6 +44,7 @@ from ..operators.similarity import ivf_assign
 # array fold + norm) live in ONE place — the batch query module — so
 # the stream==batch sim equality cannot drift
 from ..queries.pipeline_similarity import _dot, _with_norm
+from ..session import empty_frame
 from . import state_table
 
 _POSTINGS = "postings"
@@ -70,7 +71,7 @@ def apply_batch(
 def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
     p = os.path.join(index_dir, _POSTINGS)
     if not os.path.isdir(p):
-        return spark.createDataFrame([], "vec_id bigint, centroid_id bigint")
+        return empty_frame(spark, "vec_id bigint, centroid_id bigint")
     return spark.read.parquet(p)
 
 

@@ -124,6 +124,7 @@ from ..queries.retrieval import (
     phrase_match_from_positions,
     proximity_match_from_positions,
 )
+from ..session import empty_frame
 from . import state_table
 
 #: term-hash sub-partitions per segment (probe pruning unit)
@@ -350,8 +351,7 @@ def read_postings(
             and _is_committed(seg_dir, e, applied)
         )
     if not committed:
-        empty = spark.createDataFrame([], _POSTINGS_DDL)
-        return empty.select(*cols)
+        return empty_frame(spark, _POSTINGS_DDL).select(*cols)
     base = spark.read.option("basePath", seg_dir).parquet(
         *[os.path.join(seg_dir, e) for e in committed]
     )

@@ -47,6 +47,9 @@ import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..session import empty_frame
 
 _CURRENT = "CURRENT"
 _TOKEN = "_epoch"
@@ -119,7 +122,7 @@ def read_state(spark: SparkSession, state_dir: str, empty_ddl: str) -> DataFrame
     """Current generation as a DataFrame (typed-empty when absent)."""
     d = current_gen_dir(state_dir)
     if d is None or not any(e.startswith("bucket=") for e in os.listdir(d)):
-        return spark.createDataFrame([], empty_ddl)
+        return empty_frame(spark, empty_ddl)
     return spark.read.parquet(d)
 
 
@@ -276,7 +279,7 @@ def merge_batch(
     # MUST be cast to the same schema before the bucket hash or a
     # type-drifting input computes different buckets than the state it
     # needs to merge with — silent state loss.
-    target = spark.createDataFrame([], empty_ddl).schema
+    target = StructType.fromDDL(empty_ddl)
     partial = batch_partials.select(
         *[F.col(f.name).cast(f.dataType) for f in target]
     ).withColumn("bucket", bucket_expr)

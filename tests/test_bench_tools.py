@@ -245,3 +245,30 @@ def test_steal_covariate_demand_normalized():
     live = _cpu_times()
     assert live is not None and len(live) >= 8
     assert all(isinstance(v, int) and v >= 0 for v in live)
+
+
+def test_moved_vs_prior_skips_malformed_prior_records(tmp_path):
+    """The prior-record scan behind the print-cutoff protection is
+    best-effort: a missing file, a list-shaped ``queries`` and
+    non-numeric or non-positive timings protect nothing instead of
+    raising on the print path."""
+    import json
+
+    from bench import moved_vs_prior
+
+    timings = {"a": 1.0, "b": 2.0, "c": 3.0}
+    path = tmp_path / "BENCH_DETAIL.json"
+    assert moved_vs_prior(str(path), timings) == set()  # missing file
+
+    def scan(prior) -> set:
+        path.write_text(json.dumps(prior))
+        return moved_vs_prior(str(path), timings)
+
+    assert scan({"queries": [["a", 0.5]]}) == set()
+    assert scan(["not", "a", "record"]) == set()
+    assert scan({"queries": {"a": "0.5", "b": None, "c": True}}) == set()
+    assert scan({"queries": {"a": 0, "b": -1.0, "c": 0.0}}) == set()
+    # well-formed entries still count next to malformed ones
+    assert scan({"queries": {"a": "slow", "b": 1.0, "c": 2.9}}) == {"b"}
+    path.write_text("{not json")
+    assert moved_vs_prior(str(path), timings) == set()

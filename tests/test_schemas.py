@@ -10,7 +10,7 @@ production never runs it."""
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -23,6 +23,7 @@ from starknet_indexer_spark.ingest import (
     to_stored,
 )
 from starknet_indexer_spark.schemas import TABLE_SCHEMAS
+from starknet_indexer_spark.streaming import state_table
 
 
 def derived_stored_schemas(spark: SparkSession) -> dict[str, T.StructType]:
@@ -81,10 +82,26 @@ def test_declared_schemas_equal_derivation(spark):
     assert not mismatched, mismatched
 
 
+def _is_empty_local_relation(df: DataFrame) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation" and plan.data().isEmpty()
+
+
 def test_load_tables_stands_in_declared_schemas(spark, tmp_path):
     """An empty ingest root: every table is a stand-in carrying its
-    declared schema verbatim."""
+    declared schema verbatim, and the optimizer sees it as an empty
+    relation, so plans over it fold instead of running jobs."""
     tables = load_tables(spark, str(tmp_path))
     assert set(tables) == set(TABLE_SCHEMAS)
     for name, df in tables.items():
         assert df.schema == TABLE_SCHEMAS[name], name
+        assert _is_empty_local_relation(df), name
+
+
+def test_absent_state_reads_fold_to_empty(spark, tmp_path):
+    """``state_table.read_state`` on a state dir that was never
+    committed gives the DDL's schema exactly, as an empty relation."""
+    ddl = "k string, n bigint, xs array<string>"
+    df = state_table.read_state(spark, str(tmp_path / "absent"), ddl)
+    assert df.schema == spark.createDataFrame([], ddl).schema
+    assert _is_empty_local_relation(df)

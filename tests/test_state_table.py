@@ -205,3 +205,27 @@ def test_retention_widens_the_gc_grace_window(spark, tmp_path):
     # state content is the live generation's, regardless of retention
     got = st.read_state(spark, d, ddl).select("k", "v").collect()
     assert [(r["k"], r["v"]) for r in got] == [(5, 5)]
+
+
+def test_state_ddls_parse_without_a_dataframe(spark):
+    """``merge_batch`` parses its state DDL with ``StructType.fromDDL``
+    instead of building an empty DataFrame for its schema: every state
+    DDL in ``streaming/``, bare and with the ``bucket`` column the
+    writer appends, parses to the same StructType both ways."""
+    import importlib
+    import pkgutil
+
+    from pyspark.sql.types import StructType
+
+    from starknet_indexer_spark import streaming
+
+    ddls = {}
+    for mod in pkgutil.iter_modules(streaming.__path__):
+        m = importlib.import_module(f"{streaming.__name__}.{mod.name}")
+        for attr, val in vars(m).items():
+            if attr.endswith("_DDL") and isinstance(val, str):
+                ddls[f"{mod.name}.{attr}"] = val
+    assert len(ddls) >= 23, sorted(ddls)
+    for name, ddl in ddls.items():
+        for d in (ddl, ddl + ", bucket int"):
+            assert StructType.fromDDL(d) == spark.createDataFrame([], d).schema, name
