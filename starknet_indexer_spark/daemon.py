@@ -53,14 +53,15 @@ def load_tables(spark: SparkSession, tables_dir: str) -> dict[str, DataFrame]:
     stored layout (``schemas.TABLE_SCHEMAS``). Event families that
     haven't produced rows yet come back as typed empty stand-ins
     (``session.empty_frame``), so a view joining a present table
-    against an absent one sees consistent key types. A stand-in folds
-    to an empty relation at plan time: a view over absent families only
-    computes nothing (collecting it runs no Spark job), an inner join
-    with one is empty, and a union or outer join drops that side. A
-    present table is read whole, so views over it recompute its full
-    history. Neither case derives a schema: a present table is read
-    with the declared schema, which skips the footer-sampling job
-    parquet schema inference runs per table.
+    against an absent one sees consistent key types. Each stand-in is
+    an empty ``LocalRelation`` built by one JVM call (a few ms; no
+    Python-side RDD, no job), which the optimizer folds: a view over
+    absent families only computes nothing (collecting it runs no Spark
+    job), an inner join with one is empty, and a union or outer join
+    drops that side. A present table is read whole, so views over it
+    recompute its full history. Neither case derives a schema: a
+    present table is read with the declared schema, which skips the
+    footer-sampling job parquet schema inference runs per table.
 
     A present table's schema equals the declared one by column name and
     type only: the partition column ``block_bucket`` comes last (the

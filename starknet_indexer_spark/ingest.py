@@ -759,10 +759,20 @@ def ingest_batch(
         else:
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
+            # each group's thread carries the caller's job group and
+            # other local properties (pinned thread mode gives a new
+            # Python thread a fresh JVM thread that inherits none);
+            # wrapping once per group gives each thread its own copy
             with ThreadPoolExecutor(
                 max_workers=min(INGEST_FAMILY_PARALLELISM, len(todo))
             ) as pool:
-                results = list(pool.map(ingest_group, todo))
+                futures = [
+                    pool.submit(inheritable_thread_target(spark)(ingest_group), t)
+                    for t in todo
+                ]
+                results = [f.result() for f in futures]
         for family_counts, family_pool_keys in results:
             for table, n in family_counts.items():
                 counts[table] = counts.get(table, 0) + n

@@ -24,7 +24,11 @@ recomputes over full history and its cost grows with history. Event
 families that have not fired are empty stand-ins that fold at plan
 time: a view over absent families only computes nothing, so its
 refresh costs just the one-task write of its empty output, and a view
-joining one pays only for its present inputs.
+joining one pays only for its present inputs. Each tier writes its
+independent outputs concurrently (``_swap_in_concurrently``), so the
+empty-output writes of the views over absent families still happen,
+but overlap the views that do real work instead of queuing behind
+them.
 """
 
 from __future__ import annotations
@@ -32,7 +36,9 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -106,10 +112,40 @@ def _swap_in(df: DataFrame, out_dir: str) -> None:
             shutil.rmtree(p, ignore_errors=True)
 
 
+def _swap_in_concurrently(
+    spark: SparkSession, outputs: dict[str, DataFrame], out_root: str
+) -> None:
+    """Write every output under ``out_root/<name>`` through ``_swap_in``,
+    one thread per output, and wait for all of them. The outputs must
+    not read each other's directories. Each thread gets its own copy of
+    the caller's local properties (job group, scheduler pool): in
+    pinned thread mode a new Python thread gets a fresh JVM thread that
+    inherits none, and threads sharing one copy would also share the
+    per-query properties Spark sets on it, such as the SQL execution
+    id. A failed write does not stop the others; once all have
+    finished, the first failure in ``outputs`` order is re-raised."""
+    with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
+        futures = [
+            pool.submit(
+                inheritable_thread_target(spark)(_swap_in),
+                df,
+                os.path.join(out_root, name),
+            )
+            for name, df in outputs.items()
+        ]
+    for f in futures:
+        f.result()
+
+
 def refresh_operational(tables: dict[str, DataFrame], out_root: str) -> list[str]:
     """Per-block tier: recompute + swap every operational view, feeding
     the V1 / V3 outputs to their dependents (dao.ts: twamm & limit
-    order views read pool_states_materialized)."""
+    order views read pool_states_materialized). The views are built in
+    order and written concurrently; a failed write does not stop the
+    others and is re-raised once they finish. Each view's swap is
+    atomic on its own, but the tier is not all-or-nothing: after a
+    failure every other view holds its new snapshot and the failed one
+    its prior snapshot."""
     pool_states = VIEWS["pool_states"](tables).cache()
     twamm_states = VIEWS["twamm_pool_states"](tables, pool_states).cache()
     outputs: dict[str, DataFrame] = {
@@ -121,13 +157,12 @@ def refresh_operational(tables: dict[str, DataFrame], out_root: str) -> list[str
         "oracle_pool_states": VIEWS["oracle_pool_states"](tables),
         "spline_pools": VIEWS["spline_pools"](tables),
     }
-    done = []
-    for name in OPERATIONAL:
-        _swap_in(outputs[name], os.path.join(out_root, name))
-        done.append(name)
-    pool_states.unpersist()
-    twamm_states.unpersist()
-    return done
+    try:
+        _swap_in_concurrently(pool_states.sparkSession, outputs, out_root)
+    finally:
+        pool_states.unpersist()
+        twamm_states.unpersist()
+    return list(outputs)
 
 
 def refresh_analytical(
@@ -141,12 +176,17 @@ def refresh_analytical(
     window, then the analytical matviews over the refreshed rollups.
     ``since=None`` = full-history rebuild (the reference's boot pass,
     src/index.ts:120). ``as_of`` replaces the reference's NOW() for
-    determinism."""
+    determinism. The four hourly upserts are written concurrently as one
+    wave, then the analytical views, which read the hourly outputs from
+    disk, as a second. A failed write does not stop the rest of its
+    wave and is re-raised once the wave finishes (a failed hourly wave
+    skips the analytical one); each view's swap is atomic on its own,
+    but the tier is not all-or-nothing."""
     if since is not None:
         # hour-aligned: recomputed hours are complete, so replacing
         # them is idempotent (A9 upsert, dao.ts:1600-1612)
         since = since.replace(minute=0, second=0, microsecond=0)
-    done = []
+    hourly: dict[str, DataFrame] = {}
     for name in HOURLY:
         out_dir = os.path.join(out_root, name)
         fresh = VIEWS[name](tables, since=since)
@@ -157,8 +197,8 @@ def refresh_analytical(
             fresh = old.unionByName(
                 fresh.filter(F.col("hour") >= F.lit(since).cast("timestamp"))
             )
-        _swap_in(fresh, out_dir)
-        done.append(name)
+        hourly[name] = fresh
+    _swap_in_concurrently(spark, hourly, out_root)
 
     hourly_volume = spark.read.parquet(os.path.join(out_root, "hourly_volume_by_token"))
     hourly_tvl = spark.read.parquet(os.path.join(out_root, "hourly_tvl_delta_by_token"))
@@ -177,7 +217,5 @@ def refresh_analytical(
             tables
         ),
     }
-    for name in ANALYTICAL:
-        _swap_in(outputs[name], os.path.join(out_root, name))
-        done.append(name)
-    return done
+    _swap_in_concurrently(spark, outputs, out_root)
+    return list(hourly) + list(outputs)

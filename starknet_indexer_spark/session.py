@@ -12,7 +12,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -66,16 +65,25 @@ def get_spark(app_name: str = "starknet_indexer_spark", **overrides: str) -> Spa
 def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
     """A typed empty DataFrame that the optimizer knows is empty.
 
-    ``schema`` is a ``StructType`` or a DDL string; the result's schema
-    is exactly what ``createDataFrame([], schema)`` gives, nullability
-    included. Classic ``createDataFrame`` always builds a ``LogicalRDD``
-    (here over ``default.parallelism`` empty partitions), which Catalyst
-    cannot see into, so every plan over it keeps its scan, shuffle,
-    aggregate and join stages and runs them as Spark jobs. The false
-    filter fixes that: ``PruneFilters`` turns it into an empty
-    ``LocalRelation`` with the same attributes, and
-    ``PropagateEmptyRelation`` then folds aggregates, inner joins and
-    unions over it (an outer join with an empty side becomes a
+    ``schema`` is a ``StructType`` or a DDL string (parsed by
+    ``StructType.fromDDL``); the result's schema is exactly what
+    ``createDataFrame([], schema)`` gives, nullability included. The
+    relation is built by one JVM call,
+    ``SparkSession.createDataFrame(java.util.List<Row>, StructType)``
+    on an empty list, so its analyzed plan is already an empty
+    ``LocalRelation``: no Python-side RDD is parallelized and no job
+    runs. Classic PySpark ``createDataFrame([], schema)`` is not used
+    because it always builds a ``LogicalRDD`` (over
+    ``default.parallelism`` empty partitions) that Catalyst cannot see
+    into, and it costs about 20 ms per call in Python. Over the empty
+    ``LocalRelation``, ``PropagateEmptyRelation`` folds aggregates,
+    inner joins and unions (an outer join with an empty side becomes a
     projection with nulls), so a plan that reads only empty inputs runs
     no job."""
-    return spark.createDataFrame([], schema).where(F.lit(False))
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    jspark = spark._jsparkSession
+    jdf = jspark.createDataFrame(
+        spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json())
+    )
+    return DataFrame(jdf, spark)

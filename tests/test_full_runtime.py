@@ -267,3 +267,72 @@ def test_view_over_stand_ins_only_runs_no_job(spark, partial_tables_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_ingest_family_threads_carry_the_job_group(spark, tmp_path):
+    """``ingest_batch`` writes its two families' tables from pool
+    threads; every job they start belongs to the caller's job group."""
+    from .jobs import job_group
+    from .test_ingest import make_raw
+
+    raw = make_raw(spark, [1, 2])
+    with job_group(spark.sparkContext, "ingest-two-families") as jobs:
+        counts = ingest_batch(spark, raw, str(tmp_path / "tables"))
+    assert counts["swaps"] == 2 and counts["staker_staked"] == 2
+    assert jobs["grouped"]
+    assert jobs["ungrouped"] == set()
+
+
+def test_refresh_operational_writes_carry_the_job_group(spark, partial_tables_dir, tmp_path):
+    """The concurrent view writes run in the caller's job group."""
+    from starknet_indexer_spark.daemon import load_tables
+
+    from .jobs import job_group
+
+    tables = load_tables(spark, partial_tables_dir)
+    with job_group(spark.sparkContext, "refresh-operational") as jobs:
+        runtime.refresh_operational(tables, str(tmp_path / "views"))
+    assert jobs["grouped"]
+    assert jobs["ungrouped"] == set()
+
+
+def test_failed_view_write_leaves_every_view_whole(
+    spark, partial_tables_dir, tmp_path, monkeypatch
+):
+    """One view's write fails while the others are written concurrently:
+    the refresh re-raises it, leaves no staging dir, the failed view
+    keeps its prior snapshot and every other view holds its new one."""
+    from pyspark.errors import PySparkException
+
+    from starknet_indexer_spark.daemon import load_tables
+    from starknet_indexer_spark.views import VIEWS
+
+    out = str(tmp_path / "views")
+
+    def snapshot(name):
+        # part-file names carry the writing job's id, so a rewrite with
+        # the same content still shows as a new snapshot
+        path = os.path.join(out, name)
+        return sorted(os.listdir(path)), _view_digest(spark, path)
+
+    # the prior snapshots: every view over no tables at all
+    runtime.refresh_operational(load_tables(spark, str(tmp_path / "none")), out)
+    prior = {n: snapshot(n) for n in runtime.OPERATIONAL}
+
+    def failing(tables):
+        return spark.range(1).select(
+            F.raise_error(F.lit("view write failed")).alias("x")
+        )
+
+    monkeypatch.setitem(VIEWS, "oracle_pool_states", failing)
+    with pytest.raises(PySparkException, match="view write failed"):
+        runtime.refresh_operational(load_tables(spark, partial_tables_dir), out)
+    assert not [e for e in os.listdir(out) if e.endswith(".staging")]
+    after = {n: snapshot(n) for n in runtime.OPERATIONAL}
+    assert after.pop("oracle_pool_states") == prior["oracle_pool_states"]
+    for name, (files, digest) in after.items():
+        assert files != prior[name][0], name  # the new snapshot
+        if name == "pool_states":  # the only view the swaps reach
+            assert digest[0] >= 1 and digest != prior[name][1]
+        else:
+            assert digest == prior[name][1], name  # empty before and after

@@ -23,7 +23,11 @@ from starknet_indexer_spark.ingest import (
     to_stored,
 )
 from starknet_indexer_spark.schemas import TABLE_SCHEMAS
+from starknet_indexer_spark.session import empty_frame
 from starknet_indexer_spark.streaming import state_table
+
+from .jobs import job_group
+from .test_state_table import streaming_ddls
 
 
 def derived_stored_schemas(spark: SparkSession) -> dict[str, T.StructType]:
@@ -105,3 +109,23 @@ def test_absent_state_reads_fold_to_empty(spark, tmp_path):
     df = state_table.read_state(spark, str(tmp_path / "absent"), ddl)
     assert df.schema == spark.createDataFrame([], ddl).schema
     assert _is_empty_local_relation(df)
+
+
+def test_empty_frame_is_built_in_the_jvm(spark):
+    """Every stored-table schema and every streaming state DDL: the
+    analyzed plan (before any optimizer rule) is already an empty
+    ``LocalRelation``, the schema equals plain ``createDataFrame``'s
+    exactly, nullability included, and building the frames starts no
+    Spark job."""
+    ddls = streaming_ddls()
+    assert len(TABLE_SCHEMAS) == 31
+    assert len(ddls) >= 23, sorted(ddls)
+    schemas = {**TABLE_SCHEMAS, **ddls}
+    with job_group(spark.sparkContext, "empty-frame-build") as jobs:
+        frames = {name: empty_frame(spark, s) for name, s in schemas.items()}
+    assert jobs == {"grouped": set(), "ungrouped": set()}
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.getClass().getSimpleName() == "LocalRelation", name
+        assert plan.data().isEmpty(), name
+        assert df.schema == spark.createDataFrame([], schemas[name]).schema, name

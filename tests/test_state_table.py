@@ -207,15 +207,11 @@ def test_retention_widens_the_gc_grace_window(spark, tmp_path):
     assert [(r["k"], r["v"]) for r in got] == [(5, 5)]
 
 
-def test_state_ddls_parse_without_a_dataframe(spark):
-    """``merge_batch`` parses its state DDL with ``StructType.fromDDL``
-    instead of building an empty DataFrame for its schema: every state
-    DDL in ``streaming/``, bare and with the ``bucket`` column the
-    writer appends, parses to the same StructType both ways."""
+def streaming_ddls() -> dict[str, str]:
+    """Every ``*_DDL`` string constant in ``streaming/``, by
+    ``module.NAME``."""
     import importlib
     import pkgutil
-
-    from pyspark.sql.types import StructType
 
     from starknet_indexer_spark import streaming
 
@@ -225,6 +221,17 @@ def test_state_ddls_parse_without_a_dataframe(spark):
         for attr, val in vars(m).items():
             if attr.endswith("_DDL") and isinstance(val, str):
                 ddls[f"{mod.name}.{attr}"] = val
+    return ddls
+
+
+def test_state_ddls_parse_without_a_dataframe(spark):
+    """``merge_batch`` parses its state DDL with ``StructType.fromDDL``
+    instead of building an empty DataFrame for its schema: every state
+    DDL in ``streaming/``, bare and with the ``bucket`` column the
+    writer appends, parses to the same StructType both ways."""
+    from pyspark.sql.types import StructType
+
+    ddls = streaming_ddls()
     assert len(ddls) >= 23, sorted(ddls)
     for name, ddl in ddls.items():
         for d in (ddl, ddl + ", bucket int"):
