@@ -488,20 +488,17 @@ EVENT_PARSERS: dict[str, Parser] = {
 }
 
 
-def decode_events(df, event_type: str, data_col: str = "data", flatten: bool = True):
+def decode_events(df, event_type: str, data_col: str = "data"):
     """Decode a DataFrame's felt-array column into typed columns.
 
     ``df`` must carry ``data_col`` as ``ArrayType(StringType)`` of 0x
-    felts. Returns df with a ``decoded`` struct column (or flattened
-    top-level fields when ``flatten``).
+    felts. Returns df with ``data_col`` replaced by the event's decoded
+    fields as top-level columns, in the parser's field order.
     """
     parser = EVENT_PARSERS[event_type]
     value, _ = parser.parse(F.col(data_col), F.lit(0).cast("int"))
-    out = df.withColumn("decoded", value)
-    if flatten:
-        names = [n for n, _, _ in parser.ordered]
-        out = out.select(
-            *[c for c in df.columns if c != data_col],
-            *[F.col(f"decoded.`{n}`").alias(n) for n in names],
-        )
-    return out
+    names = [n for n, _, _ in parser.ordered]
+    return df.withColumn("decoded", value).select(
+        *[c for c in df.columns if c != data_col],
+        *[F.col(f"decoded.`{n}`").alias(n) for n in names],
+    )

@@ -857,22 +857,38 @@ def read_cursor(tables_dir: str) -> int | None:
 # ---------------------------------------------------------------------------
 
 
+#: staging-dir prefix for a boundary bucket's survivors during
+#: ``invalidate_from_block``. Not hidden: Spark's file listing skips any
+#: path with a component starting with ``.`` (or ``_`` without ``=``),
+#: so a hidden staging dir reads only through Spark's leniency about
+#: explicitly named paths, warning "All paths were ignored" each time.
+_STAGING_PREFIX = "invalidate_"
+
+
+def invalidation_staging_dir(tables_dir: str, table: str, bucket: int) -> str:
+    """Where ``invalidate_from_block`` stages ``table``'s surviving
+    rows of boundary ``bucket`` before deleting the bucket."""
+    return os.path.join(tables_dir, f"{_STAGING_PREFIX}{table}_b{bucket}")
+
+
 def recover_invalidation_staging(tables_dir: str) -> list[str]:
     """Crash recovery for ``invalidate_from_block``: if a prior run
     died after deleting a boundary bucket but before swapping its
-    staged survivors back in, the survivors sit orphaned in a
-    ``._invalidate_<table>_b<bucket>`` dir and the table silently
-    misses them. Restore each orphan whose boundary bucket is absent
-    (the staging dir is then the only copy); drop staging dirs whose
-    boundary bucket still exists (the bucket is the authoritative
-    superset — the crash happened before any delete). Returns the
-    paths restored. Called on entry to every invalidation."""
+    staged survivors back in, the survivors sit orphaned in an
+    ``invalidation_staging_dir`` and the table silently misses them.
+    Restore each orphan whose boundary bucket is absent (the staging
+    dir is then the only copy); drop staging dirs whose boundary
+    bucket still exists (the bucket is the authoritative superset —
+    the crash happened before any delete). Returns the paths
+    restored. Called on entry to every invalidation."""
     restored: list[str] = []
     for entry in os.listdir(tables_dir):
-        if not entry.startswith("._invalidate_"):
+        # lstrip: a dir left by a crash under the former hidden name
+        # (``._invalidate_<table>_b<bucket>``) is recovered too
+        stem = entry.lstrip("._")
+        if not stem.startswith(_STAGING_PREFIX):
             continue
-        stem = entry[len("._invalidate_"):]
-        table, _, bucket = stem.rpartition("_b")
+        table, _, bucket = stem[len(_STAGING_PREFIX):].rpartition("_b")
         staging = os.path.join(tables_dir, entry)
         if not table or not bucket.isdigit():
             continue
@@ -917,9 +933,7 @@ def invalidate_from_block(spark: SparkSession, tables_dir: str, block_number: in
         # cache loss between delete and rewrite unrecoverable
         staging = None
         if os.path.isdir(boundary_dir):
-            staging = os.path.join(
-                tables_dir, f"._invalidate_{name}_b{boundary_bucket}"
-            )
+            staging = invalidation_staging_dir(tables_dir, name, boundary_bucket)
             shutil.rmtree(staging, ignore_errors=True)
             spark.read.parquet(boundary_dir).filter(
                 F.col(block_col) < block_number

@@ -1,18 +1,20 @@
 """Vectorized (numpy int64) kernels for the quantized k-means / PQ
-assignment folds — optimization r12, guide §4.2.
+assignment folds — the one production implementation of every
+quantized assignment: the registered queries, the k-means / PQ /
+IVF-PQ trainers (``operators.clustering.kmeans_centroids``) and the
+streaming SemDeDup twin all run them.
 
-The expression formulation in ``operators.clustering`` evaluates every
-distance as ``F.aggregate(F.zip_with(...))`` — Spark higher-order
-functions run INTERPRETED per array element (no codegen), so a single
-map-only assignment pass costs rows x K x dim x ~4 interpreted
-expression evaluations (the ``word_ngrams_expr`` trap this repo has
-now hit three times: media hex grams r12 #14, the shared-index decode
-quirk, and here). These kernels hand the same arithmetic to numpy as
-ONE integer GEMM per Arrow batch (guide §4.2 "do the heavy lifting in
-native code inside the UDF"), via ``mapInPandas`` with the centroid /
-codebook relations collected once per query build (they are K-row
-artifact reads — the control-plane-scalar shape, same as the
-repo's bucket-list collects).
+Written as Spark higher-order functions (``F.aggregate(F.zip_with(
+...))`` per centroid), the same argmin runs INTERPRETED per array
+element (no codegen), so one map-only assignment pass costs rows x K x
+dim x ~4 interpreted expression evaluations. These kernels hand the
+same arithmetic to numpy as ONE integer GEMM per Arrow batch (guide
+§4.2 "do the heavy lifting in native code inside the UDF"), via
+``mapInPandas`` with the centroid / codebook relations collected once
+per call (they are K-row artifact reads — the control-plane-scalar
+shape, same as the repo's bucket-list collects). The expression
+formulation survives only as the test reference
+(tests/reference_ops.py) that pins kernel == expression.
 
 BIT-EXACTNESS CONTRACT (what makes this a safe swap under the hash
 oracle): every input is an int64 micro-unit vector (``quantize_expr``)
@@ -21,7 +23,7 @@ summation-order sensitivity — ``||v-c||^2 = ||v||^2 - 2 v.c + ||c||^2``
 computed by GEMM equals the elementwise fold exactly, in any order.
 Overflow headroom is asserted per batch (components must stay below
 2^27, vs ~2e6 for unit-scale embeddings; 64 * (2*2^27)^2 < 2^63).
-Argmin tie-breaks replicate the expression path's struct-max order:
+Argmin tie-breaks replicate the expression form's struct-max order:
 centroid/codebook rows are sorted ascending by id and numpy argmin
 returns the FIRST minimum — i.e. the smallest id — exactly the
 ``(neg_d, neg_id)`` struct-max rule.
@@ -47,12 +49,16 @@ from pyspark.sql import functions as F
 _MAX_ABS = 1 << 27
 
 
-def _collect_matrix(rel: DataFrame, id_col: str, vec_col: str):
+def _collect_matrix(rel: DataFrame, id_col: str, vec_col: str, what: str):
     """Collect a tiny (id, vector) relation to a numpy int64 matrix,
-    rows sorted ascending by id (the argmin tie-break order)."""
+    rows sorted ascending by id (the argmin tie-break order). An empty
+    relation has no nearest row to assign to: ``ValueError`` naming
+    ``what``."""
     import numpy as np
 
     rows = rel.select(id_col, vec_col).collect()
+    if not rows:
+        raise ValueError(f"{what} relation is empty: nothing to assign to")
     rows.sort(key=lambda r: r[0])
     ids = np.array([r[0] for r in rows], dtype="int64")
     mat = np.array([r[1] for r in rows], dtype="int64")
@@ -86,16 +92,18 @@ def kmeans_assign_kernel(
     include_qv: bool = True,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """``operators.clustering.kmeans_assign`` computed as one numpy
-    GEMM per Arrow batch — same contract, bit-identical output
-    (int64 distances; ties -> smallest cluster_id via argmin over
-    id-sorted rows). ``include_qv=False`` drops the vector from the
-    output so consumers that never read it (the plain assignment
-    query) don't pay its Python->JVM transfer (guide §4.1: pass only
-    the columns the function needs — in both directions)."""
+    """Map-only nearest-centroid assignment as one numpy GEMM per
+    Arrow batch. ``vecs``: (``id_col``, qv); ``cents``: (cluster_id,
+    cv). Returns (``id_col``, qv, cluster, d2): int64 distances, ties
+    -> smallest cluster_id via argmin over id-sorted rows. Raises
+    ``ValueError`` when ``cents`` is empty. ``include_qv=False``
+    drops the vector from the output so consumers that never read it
+    (the plain assignment query) don't pay its Python->JVM transfer
+    (guide §4.1: pass only the columns the function needs — in both
+    directions)."""
     import pandas as pd
 
-    ids, C = _collect_matrix(cents, "cluster_id", "cv")
+    ids, C = _collect_matrix(cents, "cluster_id", "cv", "centroid")
 
     out_cols = [id_col] + (["qv"] if include_qv else []) + ["cluster", "d2"]
     schema = ", ".join(
@@ -138,7 +146,7 @@ def silhouette_kernel(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     the smaller id, matching array_min's struct order."""
     import pandas as pd
 
-    ids, C = _collect_matrix(cents, "cluster_id", "cv")
+    ids, C = _collect_matrix(cents, "cluster_id", "cv", "centroid")
     if len(ids) < 2:
         # ADVICE r12: with one centroid the expression path's b2 is
         # NULL (array_min of an empty filtered array), which the
@@ -182,27 +190,32 @@ def pq_kernel(
     emit_codes: bool = False,
     emit_err: bool = False,
     emit_cluster: bool = False,
-    emit_recon: bool = False,
     id_col: str = "vec_id",
 ) -> DataFrame:
     """The PQ corpus pass — (optional) coarse assignment + residual,
-    per-subspace codebook argmin, (optional) reconstruction — fused
-    into ONE map pass (guide §2.4: the expression formulation ran
-    assignment and encode as separate crossJoin+fold projections).
+    then the per-subspace codebook argmin — fused into ONE map pass
+    (guide §2.4: the expression formulation ran assignment and encode
+    as separate crossJoin+fold projections).
 
     Emits, per input row and in this column order: ``id_col``,
     ``cluster`` (when ``emit_cluster``; requires ``cells``),
     ``code_0..code_{M-1}`` (when ``emit_codes``), ``err`` (when
-    ``emit_err``), ``rv`` (when ``emit_recon``: cell centroid +
-    decoded residual, or plain decode when ``cells is None``).
-    Bit-identical to the ``pq_encode`` / ``pq_reconstruct_expr``
-    expression chain (module docstring)."""
+    ``emit_err``: the total quantization error). Ties break to the
+    smaller code id. Raises ``ValueError`` when ``cells`` or a
+    codebook is empty."""
     import pandas as pd
 
     m_sub = len(books)
     sub_len = dim // m_sub
-    book_mats = [_collect_matrix(b, "cluster_id", "cv") for b in books]
-    cell_mat = _collect_matrix(cells, "cluster_id", "cv") if cells is not None else None
+    book_mats = [
+        _collect_matrix(b, "cluster_id", "cv", f"codebook {m}")
+        for m, b in enumerate(books)
+    ]
+    cell_mat = (
+        _collect_matrix(cells, "cluster_id", "cv", "IVF cell")
+        if cells is not None
+        else None
+    )
 
     cols = [f"{id_col} bigint"]
     if emit_cluster:
@@ -211,8 +224,6 @@ def pq_kernel(
         cols += [f"code_{m} int" for m in range(m_sub)]
     if emit_err:
         cols.append("err bigint")
-    if emit_recon:
-        cols.append("rv array<bigint>")
     schema = ", ".join(cols)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -243,9 +254,6 @@ def pq_kernel(
                     raise ValueError(
                         "residual component exceeds int64 GEMM headroom"
                     )
-                recon = CC[jc].copy() if emit_recon else None
-            else:
-                recon = np.zeros_like(v) if emit_recon else None
             err = np.zeros(n, dtype="int64") if emit_err else None
             for m in range(m_sub):
                 bids, B = book_mats[m]
@@ -256,12 +264,8 @@ def pq_kernel(
                     out[f"code_{m}"] = bids[j].astype("int32")
                 if emit_err:
                     err += d2[rows, j]
-                if emit_recon:
-                    recon[:, m * sub_len : (m + 1) * sub_len] += B[j]
             if emit_err:
                 out["err"] = err
-            if emit_recon:
-                out["rv"] = list(recon)
             yield pd.DataFrame(out)
 
     return vecs.select(id_col, "qv").mapInPandas(run, schema)

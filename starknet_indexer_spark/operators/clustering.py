@@ -20,10 +20,10 @@ value-hash DuckDB oracle:
 - Argmin ties break on the smaller centroid id, totally ordering the
   assignment.
 
-Scale shape: the assignment pass is MAP-ONLY — centroids collapse to
-one broadcast array row and the argmin is an array fold inside the
-scan (same trick as ``ivf_assign(rank_limit=1)``); the corpus is never
-shuffled to assign it. The update pass shuffles (cluster, component)
+Scale shape: the assignment pass is MAP-ONLY — the K centroid rows
+are collected once per round and the argmin runs as one int64 numpy
+GEMM per Arrow batch (``operators.annkernels.kmeans_assign_kernel``);
+the corpus is never shuffled to assign it. The update pass shuffles (cluster, component)
 partial sums with map-side combine — K*dim result rows regardless of
 corpus size. At 100 TB the standard play is mini-batch k-means (fit on
 a sample, assign the full corpus with the final map-only pass); both
@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .annkernels import kmeans_assign_kernel
 
 # One unit = 1e-6 of the raw component value.
 QUANT_SCALE = 1_000_000
@@ -56,32 +58,6 @@ def dist2_expr(a: Column, b: Column) -> Column:
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
-    )
-
-
-def kmeans_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Map-only nearest-centroid assignment. ``vecs``: (vec_id, qv);
-    ``cents``: (cluster_id, cv). Returns (vec_id, qv, cluster, d2).
-    Ties -> smallest cluster_id (struct-max over (-d2, -id))."""
-    cent_arr = cents.agg(F.collect_list(F.struct("cluster_id", "cv")).alias("cs"))
-    best = F.array_max(
-        F.transform(
-            F.col("cs"),
-            lambda c: F.struct(
-                (-dist2_expr(F.col("qv"), c["cv"])).alias("neg_d"),
-                (-c["cluster_id"]).alias("neg_id"),
-            ),
-        )
-    )
-    return (
-        vecs.crossJoin(F.broadcast(cent_arr))
-        .withColumn("best", best)
-        .select(
-            "vec_id",
-            "qv",
-            (-F.col("best.neg_id")).alias("cluster"),
-            (-F.col("best.neg_d")).alias("d2"),
-        )
     )
 
 
@@ -108,25 +84,19 @@ def kmeans_update(assigned: DataFrame) -> DataFrame:
 
 def kmeans_centroids(vecs: DataFrame, init_cents: DataFrame, n_updates: int) -> DataFrame:
     """The trained centroid relation (cluster_id, cv) after
-    ``n_updates`` Lloyd rounds.
+    ``n_updates`` Lloyd rounds over ``vecs`` (vec_id, qv).
 
-    Each round's centroids are lazily localCheckpoint'ed so the plan
-    does NOT nest one full assign+update subtree per round —
-    unbounded lineage makes Catalyst analysis superlinear in
-    n_updates (the same truncation connected_components applies per
-    iteration, operators/graph.py). Lazy (eager=False) keeps query
-    construction free of jobs; the checkpoint materializes on first
-    execution."""
+    Each round's assignment collects the previous round's centroids
+    (K rows) into the kernel, so every round runs one Spark job when
+    this function is called and no round's plan nests the one before
+    it. The returned relation (the last round's update) is lazily
+    localCheckpoint'ed so consumers that read it more than once — the
+    IVF-PQ trainer's residual assignment, residual join and artifact
+    write — do not re-run the last round."""
     cents = init_cents
     for _ in range(n_updates):
-        cents = kmeans_update(kmeans_assign(vecs, cents)).localCheckpoint(eager=False)
-    return cents
-
-
-def kmeans(vecs: DataFrame, init_cents: DataFrame, n_updates: int) -> DataFrame:
-    """Lloyd's algorithm: ``n_updates`` assign+update rounds followed
-    by a final assignment. Returns (vec_id, qv, cluster, d2)."""
-    return kmeans_assign(vecs, kmeans_centroids(vecs, init_cents, n_updates))
+        cents = kmeans_update(kmeans_assign_kernel(vecs, cents))
+    return cents.localCheckpoint(eager=False)
 
 
 # ---------------------------------------------------------------------------
@@ -162,82 +132,12 @@ def attach_codebook_broadcasts(
     df: DataFrame, books: list[DataFrame], prefix: str = "__cs_"
 ) -> DataFrame:
     """Cross-join one broadcast array<struct(cluster_id, cv)> row per
-    codebook onto ``df`` (columns ``{prefix}{m}``). Books come out of
-    ``kmeans_centroids`` lazily checkpointed, so attaching them to
-    several consumers does NOT retrain — the materialized RDD is
-    shared."""
+    codebook onto ``df`` (columns ``{prefix}{m}``) — the ADC lookup
+    table build (``queries.pipeline_pq._adc_lut_cols``)."""
     out = df
     for m, cents in enumerate(books):
         arr = cents.agg(
             F.collect_list(F.struct("cluster_id", "cv")).alias(f"{prefix}{m}")
         )
         out = out.crossJoin(F.broadcast(arr))
-    return out
-
-
-def pq_encode(
-    vecs: DataFrame,
-    books: list[DataFrame],
-    dim: int,
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """Encode each vector as M codebook indices (the PQ compressed
-    form: dim floats -> M small ints, e.g. 64x4B -> 4x1B) plus the
-    exact total quantization error.
-
-    MAP-ONLY: every codebook collapses to one broadcast array row and
-    each code is an argmin fold over the vector's slice inside the
-    scan — the corpus is never shuffled to encode it, the same shape
-    as ``kmeans_assign``. Ties break to the smaller code id, totally
-    ordering the output (hash-checkable).
-
-    ``passthrough`` (r12): extra ``vecs`` columns carried through to
-    the output unchanged. The IVF-PQ search pipeline needs each code
-    row's coarse ``cluster``; re-attaching it afterwards was a
-    corpus x corpus sort-merge join on vec_id — carrying it through
-    the map-only encode removes that shuffle outright (guide §2.4)."""
-    m_subspaces = len(books)
-    sub_len = dim // m_subspaces
-    out = attach_codebook_broadcasts(vecs, books)
-
-    def _scorer(s: Column):
-        # closure factory: the lambda must be single-arg (a 2-arg
-        # Python lambda — even via a default — is treated by PySpark
-        # as the (element, index) form and binds the index instead)
-        return lambda c: F.struct(
-            (-dist2_expr(s, c["cv"])).alias("neg_d"),
-            (-c["cluster_id"]).alias("neg_id"),
-        )
-
-    for m in range(m_subspaces):
-        sub = F.slice(F.col("qv"), m * sub_len + 1, sub_len)
-        best = F.array_max(F.transform(F.col(f"__cs_{m}"), _scorer(sub)))
-        out = out.withColumn(f"__best_{m}", best)
-    err = None
-    cols = [F.col("vec_id"), *[F.col(c) for c in passthrough]]
-    for m in range(m_subspaces):
-        cols.append(
-            (-F.col(f"__best_{m}.neg_id")).cast("int").alias(f"code_{m}")
-        )
-        e = -F.col(f"__best_{m}.neg_d")
-        err = e if err is None else err + e
-    return out.select(*cols, err.cast("bigint").alias("err"))
-
-
-def pq_reconstruct_expr(books_cols: list[str], code_cols: list[str]):
-    """Column expr: concatenate each code's codebook entry back into a
-    full-dim integer vector (the decoded form ADC distances are
-    computed against). ``books_cols`` name broadcast array<struct
-    (cluster_id, cv)> columns; lookup is a map build + element_at."""
-    parts = []
-    for bc, cc in zip(books_cols, code_cols):
-        m = F.map_from_entries(
-            F.transform(
-                F.col(bc), lambda c: F.struct(c["cluster_id"], c["cv"])
-            )
-        )
-        parts.append(F.element_at(m, F.col(cc).cast("long")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = F.concat(out, p)
     return out

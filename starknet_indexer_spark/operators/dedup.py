@@ -318,21 +318,19 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     n_bands: int = SIMHASH_N_BANDS,
     band_bits: int = SIMHASH_BAND_BITS,
-    materialize: bool = False,
 ) -> DataFrame:
     """(a_id, b_id, hamming) for pairs within ``max_hamming`` bits that
     collide in >= 1 band. Exact for max_hamming < n_bands (pigeonhole);
     high-recall heuristic above that — the standard SimHash trade.
 
-    ``materialize=True`` (r12): the fingerprint relation feeds BOTH
-    sides of the band self-join, and the b-side comes back as a
-    broadcast — no exchange reuse fires, so the whole fingerprint
-    subtree (explode + per-bit vote aggregation, the expensive pass)
-    executes twice. One lazy localCheckpoint pins it to one
-    evaluation; batch queries opt in, micro-batch callers keep the
-    default (a per-batch checkpoint is pure overhead there)."""
-    if materialize:
-        fps = fps.localCheckpoint(eager=False)
+    The fingerprint relation feeds BOTH sides of the band self-join,
+    and the b-side comes back as a broadcast — no exchange reuse
+    fires, so without a cut the whole fingerprint subtree (the
+    expensive pass: a per-bit vote aggregation or a Python pHash
+    kernel) would execute twice. One lazy localCheckpoint pins it to
+    one evaluation; it materializes on first execution, so building
+    the query runs no job."""
+    fps = fps.localCheckpoint(eager=False)
     bands = simhash_bands(fps, id_col, n_bands, band_bits)
     a = bands.select(
         F.col(id_col).alias("a_id"), F.col("fingerprint").alias("a_fp"), "band", "band_val"

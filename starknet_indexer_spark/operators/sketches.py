@@ -175,9 +175,9 @@ def bloom_build(
     structure value-hash-checkable.
 
     Scale shape: one map-side explode of k positions per row, one
-    distinct (map-side partially aggregated). The set-bits relation
-    broadcasts to probes; a dense bitset (the production form at
-    billions of members) is a trivial re-encoding of the same rows."""
+    distinct (map-side partially aggregated). ``bloom_probe_hits``
+    collects the relation once into a dense bitset (at most ``m_bits``
+    rows, independent of member count)."""
     rows = df.select(
         F.explode(
             F.array(*[cm_bucket_expr(item, i, m_bits) for i in range(k)])
@@ -193,114 +193,70 @@ def bloom_probe_hits(
     k: int,
     m_bits: int,
     out_col: str = "bloom_hit",
-    assume_distinct_probes: bool = False,
 ) -> DataFrame:
     """Append ``out_col`` (boolean: all k bit positions of ``item``
-    are set) to ``probes``. No false negatives — a member's bits were
-    all set at build time by construction; false positives occur when
-    all k positions collide with other members' bits, at the textbook
-    ``(1 - e^(-k*n/m))^k`` rate, deterministically shared across
-    engines. One explode + one LEFT broadcast join against the set-bit
-    relation + one aggregation keyed by the probe row's original
-    columns.
+    are set) to ``probes``, ONE output row per input row (duplicate
+    probe rows each keep their own row). No false negatives — a
+    member's bits were all set at build time by construction; false
+    positives occur when all k positions collide with other members'
+    bits, at the textbook ``(1 - e^(-k*n/m))^k`` rate, deterministically
+    shared across engines.
 
-    Output has ONE row per DISTINCT probe row (the aggregation groups
-    on the probe columns): duplicate input rows collapse, and the hit
-    test counts distinct MATCHED SALTS, so duplicates can never
-    manufacture a false negative (a count-of-matches test would see 2k
-    matches != k for a duplicated member row). Callers needing
-    multiplicity should carry a unique row id in ``probes``.
+    The probe is MAP-ONLY against a DENSE BITSET: the set-bit relation
+    — at most ``m_bits`` rows by construction, a size fixed by the
+    filter parameters and independent of corpus scale — is collected
+    ONCE into an in-memory boolean array, and each probe row tests its
+    k bucket positions in one vectorized Arrow UDF. No joins, no
+    broadcast-relation builds, no shuffle. A NULL item hashes to NULL
+    buckets, which are coalesced onto a sentinel position that is never
+    set, so it never hits. A NULL item on the BUILD side yields a NULL
+    ``bit`` row, which sets nothing; the bitset collect drops it.
 
-    ``assume_distinct_probes=True`` (r12, reshaped r13): the caller
-    guarantees ``probes`` has no duplicate rows (both in-repo callers
-    DISTINCT their probe side), which licenses a MAP-ONLY probe
-    against a DENSE BITSET: the set-bit relation — at most ``m_bits``
-    rows by construction, a size fixed by the filter parameters and
-    independent of corpus scale — is collected ONCE into an in-memory
-    boolean array (the "dense bitset re-encoding" bloom_build's
-    docstring names as the production form), and each probe row tests
-    its k bucket positions in one vectorized Arrow UDF. No joins, no
-    broadcast-relation builds (the r12 k-join formulation built k
-    separate broadcast hash relations of the bits — the
-    driver-measured regression VERDICT r12 item #1 flagged), no
-    shuffle. Output rows/values are identical to the default path on
-    distinct input by construction: position i matches iff its bit is
-    set, under either formulation; a NULL item hashes to NULL buckets,
-    which the old path's left joins never matched — replicated here by
-    coalescing NULL buckets onto a sentinel position that is never
-    set. A NULL item on the BUILD side yields a NULL ``bit`` row, which
-    sets nothing under either path; the bitset collect drops it.
+    Building the bitset runs a Spark job (the collect of ``bits``)
+    when this function is called, not when the returned DataFrame is
+    evaluated, and raises ``ValueError`` when ``bits`` holds more than
+    ``m_bits`` set positions (not a set-bit relation built with these
+    parameters)."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
 
-    With ``assume_distinct_probes``, building the bitset runs a Spark
-    job (the collect of ``bits``) when this function is called, not
-    when the returned DataFrame is evaluated, and raises
-    ``ValueError`` when ``bits`` holds more than ``m_bits`` set
-    positions (not a set-bit relation built with these parameters)."""
-    cols = probes.columns
-    if assume_distinct_probes:
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
-
-        # control-plane collect, bounded by the filter parameter (the
-        # relation is DISTINCT bit positions < m_bits — e.g. 2^20 rows
-        # / 1 MiB max for the decontamination filter) — NOT by corpus
-        # size; the same boundedness argument as the k-means centroid
-        # collects (annkernels._collect_matrix)
-        bit_rows = (
-            bits.filter(F.col("bit").isNotNull())
-            .toPandas()["bit"]
-            .to_numpy(dtype=np.int64)
+    # control-plane collect, bounded by the filter parameter (the
+    # relation is DISTINCT bit positions < m_bits — e.g. 2^20 rows
+    # / 1 MiB max for the decontamination filter) — NOT by corpus
+    # size; the same boundedness argument as the k-means centroid
+    # collects (annkernels._collect_matrix)
+    bit_rows = (
+        bits.filter(F.col("bit").isNotNull())
+        .toPandas()["bit"]
+        .to_numpy(dtype=np.int64)
+    )
+    if len(bit_rows) > m_bits:
+        raise ValueError(
+            f"bloom bits relation has {len(bit_rows)} rows > m_bits="
+            f"{m_bits}: not a valid set-bit relation"
         )
-        if len(bit_rows) > m_bits:
-            raise ValueError(
-                f"bloom bits relation has {len(bit_rows)} rows > m_bits="
-                f"{m_bits}: not a valid set-bit relation"
+    # index m_bits is the never-set sentinel for NULL buckets
+    bitset = np.zeros(m_bits + 1, dtype=bool)
+    if len(bit_rows):
+        bitset[bit_rows] = True
+
+    @pandas_udf("boolean")
+    def _all_set(buckets: pd.DataFrame) -> pd.Series:
+        hit = None
+        for c in buckets.columns:
+            h = bitset[buckets[c].to_numpy(dtype=np.int64)]
+            hit = h if hit is None else (hit & h)
+        return pd.Series(hit)
+
+    probe_struct = F.struct(
+        *[
+            F.coalesce(cm_bucket_expr(item, i, m_bits), F.lit(m_bits)).alias(
+                f"b{i}"
             )
-        # index m_bits is the never-set sentinel for NULL buckets
-        bitset = np.zeros(m_bits + 1, dtype=bool)
-        if len(bit_rows):
-            bitset[bit_rows] = True
-
-        @pandas_udf("boolean")
-        def _all_set(buckets: pd.DataFrame) -> pd.Series:
-            hit = None
-            for c in buckets.columns:
-                h = bitset[buckets[c].to_numpy(dtype=np.int64)]
-                hit = h if hit is None else (hit & h)
-            return pd.Series(hit)
-
-        probe_struct = F.struct(
-            *[
-                F.coalesce(cm_bucket_expr(item, i, m_bits), F.lit(m_bits)).alias(
-                    f"b{i}"
-                )
-                for i in range(k)
-            ]
-        )
-        return probes.select(*cols, _all_set(probe_struct).alias(out_col))
-    salted = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("salt"),
-                    cm_bucket_expr(item, i, m_bits).alias("bit"),
-                )
-                for i in range(k)
-            ]
-        )
+            for i in range(k)
+        ]
     )
-    exploded = probes.select(*cols, salted.alias("__p")).select(
-        *cols, F.col("__p.salt").alias("__salt"), F.col("__p.bit").alias("__bit")
-    )
-    matched = exploded.join(
-        F.broadcast(bits.select(F.col("bit").alias("__bit"), F.lit(1).alias("__set"))),
-        "__bit",
-        "left",
-    )
-    hit_salts = F.count_distinct(
-        F.when(F.col("__set").isNotNull(), F.col("__salt"))
-    )
-    return matched.groupBy(*cols).agg((hit_salts == k).alias(out_col))
+    return probes.select(*probes.columns, _all_set(probe_struct).alias(out_col))
 
 
 def cm_estimate(

@@ -83,14 +83,12 @@ _ORACLE = " UNION ALL ".join(
     "null_keys / orphans + summary): each PK check is one hash "
     "aggregation on its key columns only, each FK check one anti-join "
     "reading just the edge column (dimensions broadcast; the lone "
-    "fact-fact edge lineitem->orders shuffle-joins). The FUSED "
-    "one-scan-per-table variant (constraints.audit_table, still the "
-    "streaming validate_stored path) was re-measured r13 and loses "
-    "~35% here: its per-group orphan partials make the PK aggregate "
-    "carry every FK column through the groupBy, where the split "
-    "checks prune to single columns — the fused form pays off only "
-    "when scan COUNT dominates scan BYTES (wide-row storage without "
-    "column pruning), which parquet does not exhibit.",
+    "fact-fact edge lineitem->orders shuffle-joins). The same split "
+    "checks back constraints.validate_stored over the stored indexer "
+    "tables. A fused one-scan-per-table variant measured ~35% slower "
+    "(r13) and was removed: its per-group orphan partials made the PK "
+    "aggregate carry every FK column through the groupBy, where the "
+    "split checks prune to single columns.",
 )
 def constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..constraints import duplicate_keys, null_keys, orphans, summary
@@ -110,10 +108,10 @@ def constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embeddings",
         )
     }
-    # split formulation (r13, VERDICT r12 item #7): value-identical to
-    # the fused audit_table union (checked both ways this round:
-    # 27 rows equal; the DuckDB oracle is unchanged) and 1.85 vs
-    # 2.94 s median in flipped-order same-session interleaves at sf0.1
+    # split formulation (r13): value-identical to the removed fused
+    # one-scan audit (27 rows equal; the DuckDB oracle is unchanged)
+    # and 1.85 vs 2.94 s median in flipped-order same-session
+    # interleaves at sf0.1
     checks = []
     for table, cols in _PKS:
         checks.append((table, f"pk_{'_'.join(cols)}", duplicate_keys(t[table], cols)))

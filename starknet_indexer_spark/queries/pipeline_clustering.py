@@ -157,9 +157,9 @@ def kmeans_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     vecs = emb.select("vec_id", quantize_expr(F.col("embedding")).alias("qv"))
-    # numpy GEMM kernel (optimization r12, guide §4.2) — bit-identical
-    # to kmeans_assign's interpreted array folds (annkernels docstring;
-    # equality pinned in tests/test_r12_optimizations.py). include_qv
+    # numpy GEMM kernel (guide §4.2) — bit-identical to the
+    # interpreted array folds (annkernels docstring; equality pinned in
+    # tests/test_r12_optimizations.py). include_qv
     # =False: this query never reads the vector back.
     return kmeans_assign_kernel(
         vecs, load_kmeans_centroids(spark, sf_dir), include_qv=False

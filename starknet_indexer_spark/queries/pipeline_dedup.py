@@ -295,9 +295,7 @@ def _simhash_oracle() -> str:
 def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     fps = simhash_fingerprint(docs)
-    # materialize=True (r12): the word-token fingerprint pass feeds
-    # both band-join sides — one evaluation instead of two
-    return simhash_near_pairs(fps, MAX_HAMMING, materialize=True)
+    return simhash_near_pairs(fps, MAX_HAMMING)
 
 
 def _incremental_oracle() -> str:
@@ -585,16 +583,10 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = grams.filter(F.col("source") != EVAL_SOURCE).select("gh")
     bits = bloom_build(train, F.col("gh").cast("string"), BLOOM_K, BLOOM_M_BITS)
     ev = grams.filter(F.col("source") == EVAL_SOURCE).select("doc_id", "gh").distinct()
-    # assume_distinct_probes: ev is DISTINCT'd above, so the probe
-    # runs map-only against the dense bitset (one vectorized Arrow
-    # membership test per row — r13; no joins, no broadcast builds)
+    # map-only probe against the dense bitset (one vectorized Arrow
+    # membership test per row; no joins, no broadcast builds)
     hits = bloom_probe_hits(
-        ev,
-        F.col("gh").cast("string"),
-        bits,
-        BLOOM_K,
-        BLOOM_M_BITS,
-        assume_distinct_probes=True,
+        ev, F.col("gh").cast("string"), bits, BLOOM_K, BLOOM_M_BITS
     )
     return hits.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_ngrams"),

@@ -252,9 +252,7 @@ def multimodal_binary_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = simhash_fingerprint_tokens(
         docs.filter(F.length(hx) >= _BIN_GRAM), grams
     )
-    # materialize=True (r12): the hex-4-gram fingerprint pass (the
-    # dominant cost) feeds both band-join sides — one evaluation
-    return simhash_near_pairs(fps, MAX_HAMMING, materialize=True)
+    return simhash_near_pairs(fps, MAX_HAMMING)
 
 
 # ---------------------------------------------------------------------------
@@ -432,15 +430,12 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_near_pairs
 
     docs = load(spark, sf_dir, "documents")
-    # the Arrow-batched fingerprint pass is the dominant cost and the
-    # band self-join consumes it on BOTH sides — one materialization
-    # (code-review r9b: un-checkpointed, the Python pHash pass and the
-    # corpus scan executed twice per query)
-    fps = phash_fingerprints(docs).localCheckpoint(eager=False)
     # the shared pigeonhole banding/verify machinery, parameterized to
-    # the 63-bit pHash geometry (4 bands x 16 bits)
+    # the 63-bit pHash geometry (4 bands x 16 bits); it checkpoints the
+    # fingerprints, which the band self-join reads on BOTH sides, so
+    # the Python pHash pass and the corpus scan run once
     return simhash_near_pairs(
-        fps,
+        phash_fingerprints(docs),
         PHASH_MAX_HAMMING,
         n_bands=_PHASH_N_BANDS,
         band_bits=_PHASH_BAND_BITS,

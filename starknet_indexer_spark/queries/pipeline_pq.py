@@ -149,9 +149,8 @@ def pq_encode_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = emb.select("vec_id", quantize_expr(F.col("embedding")).alias("qv"))
     # codebooks from the persisted training artifact (offline at
     # deployment); the encode pass is the numpy argmin-GEMM kernel
-    # (optimization r12, guide §4.2) — still map-only, bit-identical
-    # to pq_encode's interpreted folds (pinned in
-    # tests/test_r12_optimizations.py)
+    # (guide §4.2) — map-only, bit-identical to the interpreted
+    # expression folds (pinned in tests/test_r12_optimizations.py)
     books = _load_pq_codebooks(spark, sf_dir)
     return pq_kernel(vecs, books, PQ_DIM, emit_codes=True, emit_err=True)
 
@@ -176,7 +175,6 @@ def _adc_lut_cols(qv_col, books: list[DataFrame], df: DataFrame) -> DataFrame:
         # closure factory: the transform lambda must be SINGLE-arg —
         # a 2-arg lambda (even via a default) is PySpark's
         # (element, index) form and would bind the index instead
-        # (the operators.clustering._scorer trap)
         return lambda c: F.struct(c["cluster_id"], dist2_expr(sub, c["cv"]))
 
     for m in range(len(books)):
@@ -251,10 +249,10 @@ def pq_ann_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     vecs = emb.select("vec_id", quantize_expr(F.col("embedding")).alias("qv"))
     books = _load_pq_codebooks(spark, sf_dir)
-    # encode: numpy argmin-GEMM kernel (r12, guide §4.2 — bit-equal to
-    # pq_encode); search: the per-query ADC lookup table the docstring
-    # has always described as the deployment shape (_adc_lut_cols) —
-    # same integers, value-hash-verified against the unchanged oracle
+    # encode: numpy argmin-GEMM kernel (guide §4.2); search: the
+    # per-query ADC lookup table the docstring has always described as
+    # the deployment shape (_adc_lut_cols) — same integers,
+    # value-hash-verified against the unchanged oracle
     codes = pq_kernel(vecs, books, PQ_DIM, emit_codes=True).withColumnRenamed(
         "vec_id", "neighbor_id"
     )
@@ -444,7 +442,8 @@ def _train_ivfpq(
     definition (ensure_ivfpq_codebooks persists exactly this; the
     search path reads the artifact). Integer-exact, so a parquet
     round-trip reproduces training bit-for-bit."""
-    from ..operators.clustering import kmeans_assign, kmeans_centroids
+    from ..operators.annkernels import kmeans_assign_kernel
+    from ..operators.clustering import kmeans_centroids
 
     emb = load(spark, sf_dir, "embeddings")
     # NOT silver.spread here: training is a chain of many small
@@ -456,7 +455,7 @@ def _train_ivfpq(
         F.col("vec_id").alias("cluster_id"), F.col("qv").alias("cv")
     )
     cells = kmeans_centroids(vecs, init, IVF_UPDATES)
-    assigned = kmeans_assign(vecs, cells).select("vec_id", "qv", "cluster")
+    assigned = kmeans_assign_kernel(vecs, cells).select("vec_id", "qv", "cluster")
     resid = (
         assigned.join(
             F.broadcast(cells.select(F.col("cluster_id").alias("cluster"), "cv")),
@@ -598,8 +597,8 @@ def _ivfpq_adc_dists(
     cells, books = _load_ivfpq_codebooks(spark, sf_dir)
     # ONE fused map pass (optimization r12, guide §2.4/§4.2): coarse
     # assignment, residual, and per-subspace encode run as a single
-    # numpy kernel — bit-identical to the former kmeans_assign +
-    # broadcast-residual + pq_encode expression chain (pinned in
+    # numpy kernel — bit-identical to the assign + broadcast-residual
+    # + encode expression chain (pinned in
     # tests/test_r12_optimizations.py)
     codes = pq_kernel(
         vecs, books, PQ_DIM, cells=cells, emit_cluster=True, emit_codes=True

@@ -723,17 +723,24 @@ def ann_topk_rp_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ivf_oracle_parts() -> tuple[str, str]:
+    """Split the IVF oracle (a full SELECT with its own WITH-chain)
+    into its CTE list and its final SELECT, so other oracles can embed
+    it as one relation."""
+    ivf = _ann_ivf_oracle().strip()
+    if not ivf.startswith("WITH "):
+        raise ValueError("IVF oracle SQL must start with a WITH-chain")
+    body = ivf[len("WITH "):]
+    idx = body.rindex("SELECT query_id, neighbor_id, sim, rank FROM (")
+    return body[:idx].rstrip().rstrip(","), body[idx:]
+
+
 def _ann_recall_eval_oracle() -> str:
     """Gold (exact cosine top-k) and system (IVF top-k) CTE chains
     composed into one mirror — the same reuse the Spark side gets by
     calling the two registered operators."""
-    ivf = _ann_ivf_oracle().strip()
-    # the IVF oracle is a full SELECT with its own WITH-chain; embed its
-    # CTE list and final SELECT as the `sys` relation
-    assert ivf.startswith("WITH ")
-    ivf_body = ivf[len("WITH "):]
-    idx = ivf_body.rindex("SELECT query_id, neighbor_id, sim, rank FROM (")
-    ivf_ctes, ivf_final = ivf_body[:idx].rstrip().rstrip(","), ivf_body[idx:]
+    # the IVF oracle's CTE list and final SELECT (the `sys` relation)
+    ivf_ctes, ivf_final = _ivf_oracle_parts()
     return f"""
     WITH {ivf_ctes},
     sys AS ({ivf_final}),
@@ -831,11 +838,7 @@ def _ann_ndcg_oracle() -> str:
     relevance); every per-position contribution gain/log2(pos+1) is
     micro-rounded BEFORE summation so DCG sums are order-invariant
     BIGINTs, and ideal-DCG is the same sum over the identity ranking."""
-    ivf = _ann_ivf_oracle().strip()
-    assert ivf.startswith("WITH ")
-    ivf_body = ivf[len("WITH "):]
-    idx = ivf_body.rindex("SELECT query_id, neighbor_id, sim, rank FROM (")
-    ivf_ctes, ivf_final = ivf_body[:idx].rstrip().rstrip(","), ivf_body[idx:]
+    ivf_ctes, ivf_final = _ivf_oracle_parts()
     return f"""
     WITH {ivf_ctes},
     sys AS ({ivf_final}),

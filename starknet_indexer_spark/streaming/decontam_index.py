@@ -139,15 +139,10 @@ def bloom_screen(
         .select("doc_id", "gh")
         .distinct()
     )
-    # assume_distinct_probes: ev is DISTINCT'd above — same map-only
-    # probe as the registered batch query (shared-code equality, r12)
+    # same map-only bitset probe as the registered batch query
+    # (shared-code equality)
     hits = bloom_probe_hits(
-        ev,
-        F.col("gh").cast("string"),
-        bits,
-        BLOOM_K,
-        BLOOM_M_BITS,
-        assume_distinct_probes=True,
+        ev, F.col("gh").cast("string"), bits, BLOOM_K, BLOOM_M_BITS
     )
     return hits.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_ngrams"),

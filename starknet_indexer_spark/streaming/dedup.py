@@ -9,12 +9,14 @@ must pass each key through exactly once.
 event-time watermark passes the key's first-seen timestamp + the
 watermark delay, so state is bounded by the duplicate-arrival skew —
 NOT by history length. Plain ``dropDuplicates`` on a stream would grow
-state forever; this is the operator that runs indefinitely at
-100 TB/day. Duplicates farther apart than the watermark are the
-residual risk (the standard trade), and the batch recompute
-(``dedup_exact``) is the periodic ground-truth sweep, exactly like the
-reference's incremental-table-vs-view oracle pattern
-(src/dao.ts:510-515).
+state forever. Duplicates farther apart than the watermark are the
+residual risk (indistinguishable from a legitimate new row without
+unbounded memory), and the batch recompute (``dedup_exact``) is the
+periodic ground-truth sweep, exactly like the reference's
+incremental-table-vs-view oracle pattern (src/dao.ts:510-515). The
+reference's idempotent insert path (ON CONFLICT DO NOTHING on event
+inserts) solves the same redelivery problem with a storage-side unique
+index; this is the stream-side equivalent.
 """
 
 from __future__ import annotations
@@ -30,5 +32,7 @@ def deduped_stream(
 ) -> DataFrame:
     """First arrival per key passes; re-arrivals within the watermark
     window are dropped. Works in append mode (rows emit immediately;
-    only the dedup state waits on the watermark)."""
+    only the dedup state waits on the watermark). State: one entry per
+    distinct key inside the horizon — bounded by arrival rate x delay,
+    independent of stream length."""
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)

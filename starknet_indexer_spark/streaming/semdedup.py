@@ -46,7 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.clustering import kmeans_assign, quantize_expr
+from ..operators.annkernels import kmeans_assign_kernel
+from ..operators.clustering import quantize_expr
 from ..queries.pipeline_clustering import semdedup_from_assigned
 from . import state_table
 
@@ -74,9 +75,10 @@ def apply_batch(
     epoch_token: str | None = None,
 ) -> None:
     """Assign one micro-batch of (vec_id, embedding) rows to their
-    nearest frozen centroid (map-only — the K-row centroid relation
-    broadcasts) and fold the assignments into the state."""
-    assigned = kmeans_assign(
+    nearest frozen centroid (map-only — the K-row centroid relation is
+    collected into the same int64 GEMM kernel the batch queries run)
+    and fold the assignments into the state."""
+    assigned = kmeans_assign_kernel(
         vecs.select("vec_id", quantize_expr(F.col("embedding")).alias("qv")),
         centroids,
     )
@@ -94,8 +96,8 @@ def apply_batch(
 
 
 def read_assignments(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The maintained assignment relation — equals kmeans_assign over
-    the union of all delivered vectors."""
+    """The maintained assignment relation — equals
+    kmeans_assign_kernel over the union of all delivered vectors."""
     return state_table.read_state(spark, state_dir, _EMPTY_DDL).select(
         "vec_id", "qv", "cluster", "d2"
     )

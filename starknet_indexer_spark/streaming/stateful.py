@@ -69,7 +69,7 @@ def latest_state_stream(
                 changed = True
         # emit only keys whose latest row actually changed — a batch
         # of stale (lower event_id) rows must not rewrite state or
-        # trigger a downstream re-upsert (same guard as stateful_v2)
+        # trigger a downstream re-upsert
         if not changed:
             return
         state.update((best_id, *best_vals))

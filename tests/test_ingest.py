@@ -539,12 +539,13 @@ class TestInvalidationCrashRecovery:
     def test_orphaned_staging_restored_on_next_invalidation(self, spark, tdir):
         """Crash window: survivors staged durably, boundary bucket
         deleted, then death before os.replace — the survivors are
-        orphaned in ._invalidate_*. The next invalidation must restore
+        orphaned in the staging dir. The next invalidation must restore
         them before proceeding (data loss otherwise)."""
         import shutil as sh
 
         from starknet_indexer_spark.ingest import (
             BLOCK_BUCKET_SIZE,
+            invalidation_staging_dir,
             recover_invalidation_staging,
         )
 
@@ -552,7 +553,7 @@ class TestInvalidationCrashRecovery:
         ingest_batch(spark, make_raw(spark, blocks), tdir)
         bucket = 1002 // BLOCK_BUCKET_SIZE
         boundary = os.path.join(tdir, "swaps", f"block_bucket={bucket}")
-        staging = os.path.join(tdir, f"._invalidate_swaps_b{bucket}")
+        staging = invalidation_staging_dir(tdir, "swaps", bucket)
         # simulate the crash: survivors staged, boundary gone
         spark.read.parquet(boundary).filter(F.col("block_number") < 1002).write.mode(
             "overwrite"
@@ -578,6 +579,7 @@ class TestInvalidationCrashRecovery:
         swapped over it."""
         from starknet_indexer_spark.ingest import (
             BLOCK_BUCKET_SIZE,
+            invalidation_staging_dir,
             recover_invalidation_staging,
         )
 
@@ -585,7 +587,7 @@ class TestInvalidationCrashRecovery:
         ingest_batch(spark, make_raw(spark, blocks), tdir)
         bucket = 1002 // BLOCK_BUCKET_SIZE
         boundary = os.path.join(tdir, "swaps", f"block_bucket={bucket}")
-        staging = os.path.join(tdir, f"._invalidate_swaps_b{bucket}")
+        staging = invalidation_staging_dir(tdir, "swaps", bucket)
         spark.read.parquet(boundary).filter(F.col("block_number") < 1002).write.mode(
             "overwrite"
         ).parquet(staging)
@@ -594,6 +596,46 @@ class TestInvalidationCrashRecovery:
         assert recover_invalidation_staging(tdir) == []
         assert not os.path.exists(staging)
         assert sorted(map(str, spark.read.parquet(boundary).collect())) == pre
+
+
+    def test_orphan_under_former_hidden_name_restored(self, spark, tdir):
+        """A crash under the former hidden staging name
+        (``._invalidate_<table>_b<bucket>``) is still recovered."""
+        import shutil as sh
+
+        from starknet_indexer_spark.ingest import (
+            BLOCK_BUCKET_SIZE,
+            recover_invalidation_staging,
+        )
+
+        ingest_batch(spark, make_raw(spark, [995, 996, 1001, 1002]), tdir)
+        bucket = 1002 // BLOCK_BUCKET_SIZE
+        boundary = os.path.join(tdir, "swaps", f"block_bucket={bucket}")
+        staging = os.path.join(tdir, f"._invalidate_swaps_b{bucket}")
+        spark.read.parquet(boundary).filter(F.col("block_number") < 1002).write.mode(
+            "overwrite"
+        ).parquet(staging)
+        want = sorted(map(str, spark.read.parquet(staging).collect()))
+        sh.rmtree(boundary)
+        assert recover_invalidation_staging(tdir) == [boundary]
+        assert not os.path.exists(staging)
+        assert sorted(map(str, spark.read.parquet(boundary).collect())) == want
+        assert len(want) > 0
+
+    def test_staging_path_passes_spark_path_filter(self, spark, tdir):
+        """Spark's file listing drops hidden paths (a component starting
+        with ``.``, or ``_`` without ``=``); the staging dir must not
+        be one, so its reads need no leniency and log no "All paths
+        were ignored" warning."""
+        from starknet_indexer_spark.ingest import invalidation_staging_dir
+
+        hadoop_fs = spark._jvm.org.apache.spark.util.HadoopFSUtils
+        staging = invalidation_staging_dir(tdir, "swaps", 10)
+        assert not hadoop_fs.shouldFilterOutPath(staging)
+        # the helper does reject the former hidden name
+        assert hadoop_fs.shouldFilterOutPath(
+            os.path.join(tdir, "._invalidate_swaps_b10")
+        )
 
 
 class TestEpochMarkerHygiene:

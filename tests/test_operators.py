@@ -308,12 +308,13 @@ class TestProductQuantization:
         codebooks, integer distances, total tiebreak."""
         from pyspark.sql.window import Window as W
 
+        from starknet_indexer_spark.operators.annkernels import pq_kernel
         from starknet_indexer_spark.operators.clustering import (
             dist2_expr,
             pq_codebooks,
-            pq_encode,
-            pq_reconstruct_expr,
         )
+
+        from .reference_ops import pq_reconstruct_expr
 
         vecs = self._vecs(spark)
         qset = vecs.filter(F.col("vec_id") < 10).select(
@@ -342,7 +343,7 @@ class TestProductQuantization:
 
         m_sub = 4
         books = pq_codebooks(vecs, 64, m_sub, 16, 1)
-        enc = pq_encode(vecs, books, 64)
+        enc = pq_kernel(vecs, books, 64, emit_codes=True)
         for m, cents in enumerate(books):
             arr = cents.agg(
                 F.collect_list(F.struct("cluster_id", "cv")).alias(f"__cs_{m}")
@@ -385,6 +386,83 @@ class TestProductQuantization:
             .collect()
         }
         assert len(exact5 & top5) / len(exact5) >= 0.85
+
+
+class TestAnnKernelEdgeInputs:
+    """Empty, one-row and empty-model inputs for the int64 GEMM
+    kernels (the only production assignment path)."""
+
+    VECS = "vec_id bigint, qv array<bigint>"
+    CENTS = "cluster_id bigint, cv array<bigint>"
+
+    def _cents(self, spark):
+        return spark.createDataFrame(
+            [(0, [0, 0, 0, 0]), (1, [10, 10, 10, 10]), (2, [10, 10, 10, 10])],
+            self.CENTS,
+        )
+
+    def test_kmeans_assign_kernel_empty_and_one_row(self, spark):
+        from starknet_indexer_spark.operators.annkernels import (
+            kmeans_assign_kernel,
+        )
+
+        from .reference_ops import kmeans_assign
+
+        cents = self._cents(spark)
+        empty = kmeans_assign_kernel(spark.createDataFrame([], self.VECS), cents)
+        assert empty.columns == ["vec_id", "qv", "cluster", "d2"]
+        assert empty.collect() == []
+        # equidistant from clusters 1 and 2: the tie breaks to 1
+        one = spark.createDataFrame([(7, [9, 9, 9, 9])], self.VECS)
+        got = [tuple(r) for r in kmeans_assign_kernel(one, cents).collect()]
+        assert got == [(7, [9, 9, 9, 9], 1, 4)]
+        assert got == [tuple(r) for r in kmeans_assign(one, cents).collect()]
+
+    def test_pq_kernel_empty_and_one_row(self, spark):
+        from starknet_indexer_spark.operators.annkernels import pq_kernel
+
+        from .reference_ops import pq_encode
+
+        books = [
+            spark.createDataFrame([(0, [0, 0]), (1, [5, 5])], self.CENTS),
+            spark.createDataFrame([(3, [1, 1]), (4, [8, 8])], self.CENTS),
+        ]
+        empty = pq_kernel(
+            spark.createDataFrame([], self.VECS), books, 4,
+            emit_codes=True, emit_err=True,
+        )
+        assert empty.columns == ["vec_id", "code_0", "code_1", "err"]
+        assert empty.collect() == []
+        one = spark.createDataFrame([(7, [4, 5, 2, 1])], self.VECS)
+        got = [
+            tuple(r)
+            for r in pq_kernel(
+                one, books, 4, emit_codes=True, emit_err=True
+            ).collect()
+        ]
+        assert got == [(7, 1, 3, 2)]
+        assert got == [tuple(r) for r in pq_encode(one, books, 4).collect()]
+
+    def test_empty_model_relation_raises_named_error(self, spark):
+        """An empty centroid / codebook / cell relation has no nearest
+        row: an explicit ValueError naming it, raised when the kernel is
+        built (not a numpy AxisError inside a Python worker)."""
+        import pytest
+
+        from starknet_indexer_spark.operators.annkernels import (
+            kmeans_assign_kernel,
+            pq_kernel,
+        )
+
+        vecs = spark.createDataFrame([(7, [1, 2, 3, 4])], self.VECS)
+        none = spark.createDataFrame([], self.CENTS)
+        with pytest.raises(ValueError, match="centroid relation is empty"):
+            kmeans_assign_kernel(vecs, none)
+        book = spark.createDataFrame([(0, [0, 0])], self.CENTS)
+        with pytest.raises(ValueError, match="codebook 1 relation is empty"):
+            pq_kernel(vecs, [book, none], 4, emit_codes=True)
+        with pytest.raises(ValueError, match="IVF cell relation is empty"):
+            pq_kernel(vecs, [book, book], 4, cells=none, emit_codes=True)
 
 
 class TestSimHash:
@@ -789,9 +867,9 @@ class TestBloomFilter:
         )
 
     def test_duplicate_probe_rows_cannot_false_negative(self, spark):
-        """A duplicated member probe row must still report hit=True:
-        the hit test counts distinct matched salts, not matched rows
-        (2k row-matches != k would silently flip a member to False)."""
+        """A duplicated member probe row must still report hit=True,
+        and each duplicate keeps its own output row (one output row
+        per input row)."""
         from starknet_indexer_spark.operators.sketches import (
             bloom_build,
             bloom_probe_hits,
@@ -802,14 +880,55 @@ class TestBloomFilter:
         probes = spark.createDataFrame(
             [("a",), ("a",), ("zzz-nonmember",)], "item string"
         )
-        got = {
-            r["item"]: r["bloom_hit"]
-            for r in bloom_probe_hits(
-                probes, F.col("item"), bits, k=4, m_bits=1 << 16
-            ).collect()
-        }
-        assert got["a"] is True
-        assert got["zzz-nonmember"] is False
+        rows = bloom_probe_hits(
+            probes, F.col("item"), bits, k=4, m_bits=1 << 16
+        ).collect()
+        assert len(rows) == 3
+        assert [r["bloom_hit"] for r in rows if r["item"] == "a"] == [True, True]
+        assert [r["bloom_hit"] for r in rows if r["item"] != "a"] == [False]
+
+    def test_probe_edge_inputs(self, spark):
+        """Empty probes give an empty result with the hit column; an
+        empty ``bits`` relation (nothing was a member) flags no row;
+        a NULL probe item is never a hit; a one-row probe gives one
+        row."""
+        from starknet_indexer_spark.operators.sketches import (
+            bloom_build,
+            bloom_probe_hits,
+        )
+
+        m_bits = 1 << 10
+        members = spark.createDataFrame([("a",)], "item string")
+        bits = bloom_build(members, F.col("item"), k=3, m_bits=m_bits)
+        no_bits = bloom_build(
+            members.limit(0), F.col("item"), k=3, m_bits=m_bits
+        )
+
+        empty = bloom_probe_hits(
+            members.limit(0), F.col("item"), bits, k=3, m_bits=m_bits
+        )
+        assert empty.columns == ["item", "bloom_hit"]
+        assert empty.collect() == []
+
+        probes = spark.createDataFrame([("a",), (None,), ("b",)], "item string")
+        none_set = bloom_probe_hits(
+            probes, F.col("item"), no_bits, k=3, m_bits=m_bits
+        ).collect()
+        assert len(none_set) == 3
+        assert all(r["bloom_hit"] is False for r in none_set)
+
+        got = bloom_probe_hits(
+            probes, F.col("item"), bits, k=3, m_bits=m_bits
+        ).collect()
+        assert len(got) == 3
+        by_item = {r["item"]: r["bloom_hit"] for r in got}
+        assert by_item["a"] is True
+        assert by_item[None] is False
+
+        one = bloom_probe_hits(
+            members, F.col("item"), bits, k=3, m_bits=m_bits
+        ).collect()
+        assert [(r["item"], r["bloom_hit"]) for r in one] == [("a", True)]
 
 
 class TestCountMinSketch:

@@ -211,7 +211,7 @@ class TestExecutionShape:
             # exchange per join side under AQE) + the pair distinct
             ("minhash_lsh_dedup_capped", 3),
             # split per-check audit (r13, measured 1.85 vs 2.94 s for
-            # the fused audit_table form): the corpus-sized exchanges
+            # the removed fused one-scan form): the corpus-sized exchanges
             # are the same 10 PK-key groupBys either way; the extra
             # ones are 1-row count aggregations (bytes ~ 0) + 7
             # parent-key dedups + the lineitem->orders anti-join no
@@ -308,9 +308,9 @@ class TestKMeansPlan:
         # artifact read) and the argmin runs as one numpy GEMM per
         # Arrow batch (MapInPandas) — the corpus is never shuffled,
         # and there is no broadcast-join stage left at all. (The
-        # expression formulation with the broadcast centroid array
-        # remains in operators/clustering.py for the trainer and the
-        # streaming twin; kernel == expression is pinned in
+        # trainer and the streaming twin run the same kernel; the
+        # expression formulation survives in tests/reference_ops.py,
+        # and kernel == expression is pinned in
         # tests/test_r12_optimizations.py.)
         df = q(spark, "kmeans_cluster_assign")
         plan = df._jdf.queryExecution().executedPlan().toString()

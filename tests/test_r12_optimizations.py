@@ -159,23 +159,23 @@ class TestConnectedComponentsRestructure:
 class TestAnnKernelEquality:
     """The numpy GEMM kernels (operators/annkernels.py) must be
     bit-identical to the interpreted expression formulations they
-    replaced in the query layer — integer arithmetic end to end, so
-    any divergence is a real defect, not float noise. The expression
-    operators stay the reference definition (and the streaming /
-    trainer paths still run them)."""
+    replaced — integer arithmetic end to end, so any divergence is a
+    real defect, not float noise. The kernels are the only production
+    path (queries, trainers and the streaming SemDeDup twin); the
+    expression forms live in tests/reference_ops.py as the reference
+    definition."""
 
     def test_kmeans_assign_kernel_equals_expression(self, spark):
         from starknet_indexer_spark.operators.annkernels import (
             kmeans_assign_kernel,
         )
-        from starknet_indexer_spark.operators.clustering import (
-            kmeans_assign,
-            quantize_expr,
-        )
+        from starknet_indexer_spark.operators.clustering import quantize_expr
         from starknet_indexer_spark.catalog import load
         from starknet_indexer_spark.queries.pipeline_clustering import (
             load_kmeans_centroids,
         )
+
+        from .reference_ops import kmeans_assign
 
         vecs = load(spark, SF_DIR, "embeddings").select(
             "vec_id", quantize_expr(F.col("embedding")).alias("qv")
@@ -193,17 +193,15 @@ class TestAnnKernelEquality:
 
     def test_pq_kernel_equals_expression_chain(self, spark):
         from starknet_indexer_spark.operators.annkernels import pq_kernel
-        from starknet_indexer_spark.operators.clustering import (
-            kmeans_assign,
-            pq_encode,
-            quantize_expr,
-        )
+        from starknet_indexer_spark.operators.clustering import quantize_expr
         from starknet_indexer_spark.catalog import load
         from starknet_indexer_spark.queries.pipeline_pq import (
             PQ_DIM,
             _load_ivfpq_codebooks,
             _load_pq_codebooks,
         )
+
+        from .reference_ops import kmeans_assign, pq_encode
 
         vecs = load(spark, SF_DIR, "embeddings").select(
             "vec_id", quantize_expr(F.col("embedding")).alias("qv")
@@ -307,7 +305,6 @@ class TestAnnKernelEquality:
         from starknet_indexer_spark.operators.clustering import (
             attach_codebook_broadcasts,
             dist2_expr,
-            pq_reconstruct_expr,
             quantize_expr,
         )
         from starknet_indexer_spark.catalog import load
@@ -319,6 +316,8 @@ class TestAnnKernelEquality:
             _adc_lut_cols,
             _load_pq_codebooks,
         )
+
+        from .reference_ops import pq_reconstruct_expr
 
         vecs = load(spark, SF_DIR, "embeddings").select(
             "vec_id", quantize_expr(F.col("embedding")).alias("qv")

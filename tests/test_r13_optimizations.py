@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 class TestBloomBitsetProbe:
     def test_bitset_probe_equals_join_formulations(self, spark):
-        """The r13 dense-bitset probe must flag exactly the rows the
-        r11 explode+join+aggregate formulation flags, including
+        """The dense-bitset probe must flag exactly the rows the
+        explode+join+aggregate reference formulation flags, including
         non-members (false-positive pattern shared bit-for-bit) and a
         NULL item (never a hit). A NULL member yields a NULL ``bit``
         row, which the bitset collect must skip."""
@@ -21,6 +21,8 @@ class TestBloomBitsetProbe:
             bloom_build,
             bloom_probe_hits,
         )
+
+        from .reference_ops import bloom_probe_hits_join
 
         members = spark.createDataFrame(
             [(f"m{i}",) for i in range(200)] + [(None,)], "item string"
@@ -36,17 +38,12 @@ class TestBloomBitsetProbe:
         fast = {
             r["item"]: r["bloom_hit"]
             for r in bloom_probe_hits(
-                probes,
-                F.col("item"),
-                bits,
-                k=4,
-                m_bits=1 << 12,
-                assume_distinct_probes=True,
+                probes, F.col("item"), bits, k=4, m_bits=1 << 12
             ).collect()
         }
         slow = {
             r["item"]: r["bloom_hit"]
-            for r in bloom_probe_hits(
+            for r in bloom_probe_hits_join(
                 probes, F.col("item"), bits, k=4, m_bits=1 << 12
             ).collect()
         }
@@ -63,7 +60,4 @@ class TestBloomBitsetProbe:
         bits = spark.range(9).select(F.col("id").alias("bit"))
         probes = spark.createDataFrame([("a",)], "item string")
         with pytest.raises(ValueError, match="m_bits=8"):
-            bloom_probe_hits(
-                probes, F.col("item"), bits, k=2, m_bits=8,
-                assume_distinct_probes=True,
-            )
+            bloom_probe_hits(probes, F.col("item"), bits, k=2, m_bits=8)

@@ -173,21 +173,30 @@ class TestAuditEmptyTables:
     def test_empty_child_reports_zero_not_null(self, spark):
         """An EMPTY child table (normal input: load_tables stands in
         empty typed tables for unfired event families) must report 0
-        violations for every constraint — the fused single-pass
-        aggregate previously returned NULL for the fk_ columns."""
-        from starknet_indexer_spark.constraints import audit_table
-
+        violations for every constraint, not NULL."""
         child = spark.createDataFrame(
             [], "event_id long, block_number int"
         )
         parent = spark.createDataFrame([(1,)], "number int")
-        rows = audit_table(
-            child, "empty_rel", ["event_id"],
-            [(["block_number"], parent, ["number"], True)],
+        rows = validate_stored(
+            {"staker_staked": child, "blocks": parent}
         ).collect()
-        got = {r["constraint_name"]: r["violations"] for r in rows}
-        assert got == {
-            "pk_event_id": 0,
-            "notnull_event_id": 0,
-            "fk_block_number": 0,
+        got = {
+            (r["relation"], r["constraint_name"]): r["violations"] for r in rows
         }
+        assert got == {
+            ("blocks", "pk_number"): 0,
+            ("blocks", "notnull_number"): 0,
+            ("staker_staked", "pk_event_id"): 0,
+            ("staker_staked", "notnull_event_id"): 0,
+            ("staker_staked", "fk_block_number"): 0,
+        }
+
+    def test_no_known_table_raises(self, spark):
+        """A dict with no known stored table has nothing to validate:
+        an explicit ValueError, not an assert ``python -O`` strips."""
+        other = spark.createDataFrame([(1,)], "x int")
+        with pytest.raises(ValueError, match="no stored tables present"):
+            validate_stored({"not_a_stored_table": other})
+        with pytest.raises(ValueError, match="no stored tables present"):
+            validate_stored({})

@@ -190,69 +190,6 @@ class TestStreamingDedup:
         assert spark.table("dedup_t").count() == len(want)  # no double emission
 
 
-class TestLatestStateTransformWithState:
-    """Same contract as TestLatestStateStream on the Spark-4
-    transformWithState API (typed ValueState + RocksDB store)."""
-
-    def test_stream_equals_batch_argmax(self, spark, events_feed, tmp_path):
-        pytest.importorskip(
-            "google.protobuf",
-            reason="transformWithState's Python state protocol is protobuf-encoded",
-        )
-        from starknet_indexer_spark.streaming.stateful_v2 import (
-            install_rocksdb_state_store,
-            latest_state_stream_tws,
-        )
-
-        ev, feed = events_feed
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        install_rocksdb_state_store(spark)
-        try:
-            stream = (
-                spark.readStream.schema(spark.read.parquet(feed).schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(feed)
-            )
-            latest = latest_state_stream_tws(
-                stream.select("user_id", "event_id", "value"), "user_id"
-            )
-            q = (
-                latest.writeStream.outputMode("update")
-                .format("memory")
-                .queryName("latest_tws")
-                .option("checkpointLocation", str(tmp_path / "ck_tws"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-        emitted = spark.table("latest_tws").toPandas()
-        final = emitted.groupby("user_id").apply(
-            lambda g: g.loc[g["event_id"].idxmax()], include_groups=False
-        )
-        got = {
-            (int(uid), int(r["event_id"]), round(float(r["value"]), 6))
-            for uid, r in final.iterrows()
-        }
-        want = {
-            (int(r["user_id"]), int(r["eid"]), round(float(r["v"]), 6))
-            for r in ev.groupBy("user_id")
-            .agg(
-                F.max("event_id").alias("eid"),
-                F.max_by("value", "event_id").alias("v"),
-            )
-            .collect()
-        }
-        assert got == want and len(got) > 0
-
-
 class TestStreamStreamIntervalJoin:
     def test_stream_equals_batch(self, spark, tmp_path):
         """Stream-stream interval join (purchase matched to the same
@@ -576,9 +513,7 @@ class TestExactDedupStream:
         """Rows redelivered in a later micro-batch (within the
         watermark) must be dropped; the drained stream equals the
         batch dropDuplicates result."""
-        from starknet_indexer_spark.streaming.dedup_exact import (
-            exact_dedup_stream,
-        )
+        from starknet_indexer_spark.streaming.dedup import deduped_stream
 
         ev = load(spark, SF_DIR, "events").select("event_id", "ts", "user_id")
         feed = str(tmp_path / "feed")
@@ -595,7 +530,7 @@ class TestExactDedupStream:
             .parquet(feed)
         )
         q = (
-            exact_dedup_stream(
+            deduped_stream(
                 stream, ["event_id"], "ts",
                 # span-covering horizon: the corpus covers ~30 days and
                 # maxFilesPerTrigger=1 gives no file-order guarantee, so

@@ -9,15 +9,14 @@ import os
 from pyspark.sql import functions as F
 
 from starknet_indexer_spark.catalog import load
-from starknet_indexer_spark.operators.clustering import (
-    kmeans_assign,
-    quantize_expr,
-)
+from starknet_indexer_spark.operators.clustering import quantize_expr
 from starknet_indexer_spark.queries.pipeline_clustering import (
     load_kmeans_centroids,
     semdedup_select,
 )
 from starknet_indexer_spark.streaming import semdedup
+
+from .reference_ops import kmeans_assign
 
 SF = "/root/testdata/sf0.001"
 
