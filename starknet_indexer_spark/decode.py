@@ -488,17 +488,17 @@ EVENT_PARSERS: dict[str, Parser] = {
 }
 
 
-def decode_events(df, event_type: str, data_col: str = "data"):
+def decode_events(df, event_type: str):
     """Decode a DataFrame's felt-array column into typed columns.
 
-    ``df`` must carry ``data_col`` as ``ArrayType(StringType)`` of 0x
-    felts. Returns df with ``data_col`` replaced by the event's decoded
+    ``df`` must carry ``data`` as ``ArrayType(StringType)`` of 0x
+    felts. Returns df with ``data`` replaced by the event's decoded
     fields as top-level columns, in the parser's field order.
     """
     parser = EVENT_PARSERS[event_type]
-    value, _ = parser.parse(F.col(data_col), F.lit(0).cast("int"))
+    value, _ = parser.parse(F.col("data"), F.lit(0).cast("int"))
     names = [n for n, _, _ in parser.ordered]
     return df.withColumn("decoded", value).select(
-        *[c for c in df.columns if c != data_col],
+        *[c for c in df.columns if c != "data"],
         *[F.col(f"decoded.`{n}`").alias(n) for n in names],
     )

@@ -131,10 +131,9 @@ def compact_table(
     table_dir: str,
     max_bucket: int | None = None,
     target_file_bytes: int = TARGET_FILE_BYTES,
-    min_files: int = 2,
 ) -> dict[str, tuple[int, int]]:
-    """Compact every bucket of one table with >= ``min_files`` data
-    files. Returns {bucket_dir: (files_before, files_after)}."""
+    """Compact every bucket of one table with two or more data files.
+    Returns {bucket_dir: (files_before, files_after)}."""
     return _rewrite_buckets(
         spark,
         table_dir,
@@ -142,7 +141,7 @@ def compact_table(
         lambda df, n_out: df.coalesce(n_out),
         max_bucket,
         target_file_bytes,
-        min_files,
+        min_files=2,
     )
 
 
@@ -276,7 +275,6 @@ def zorder_table(
     bits_per_dim: int = 12,
     max_bucket: int | None = None,
     target_file_bytes: int = TARGET_FILE_BYTES,
-    min_files: int = 1,
     done_marker: str | None = "_zordered",
 ) -> dict[str, tuple[int, int]]:
     """Compaction with multi-dimensional clustering: rewrite each
@@ -340,7 +338,7 @@ def zorder_table(
         plan_fn,
         max_bucket,
         target_file_bytes,
-        min_files,
+        min_files=1,
         done_marker=done_marker,
     )
 

@@ -7,7 +7,6 @@ express the semantics.
 
 - ``dedup``       — MinHash+LSH / SimHash near-duplicate detection
 - ``similarity``  — LSH-bucketed approximate nearest neighbors
-- ``skew``        — salted aggregation / salted join for hot keys
 """
 
-from . import dedup, similarity, skew  # noqa: F401
+from . import dedup, similarity  # noqa: F401

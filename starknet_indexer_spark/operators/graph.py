@@ -27,13 +27,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: rounds after which an unconverged propagation raises rather than
+#: return labels that are not yet the component minimum
+MAX_ROUNDS = 50
 
-def connected_components(
-    edges: DataFrame, src: str = "u", dst: str = "v", max_iter: int = 50
-) -> DataFrame:
+
+def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     """(id, component) for every node appearing in ``edges``;
     ``component`` is the minimum node id in the node's component.
-    Deterministic: the fixpoint is unique regardless of round count."""
+    Deterministic: the fixpoint is unique regardless of round count.
+    Raises ``RuntimeError`` if a round still changes a label after
+    ``MAX_ROUNDS`` rounds (a node ``MAX_ROUNDS`` or more hops from its
+    component's minimum)."""
     # one materialization of the symmetric edge relation (r12): sym is
     # consumed by EVERY round's neighbor join, and the edge pipeline
     # behind it (e.g. the full MinHash LSH pair derivation) would
@@ -46,7 +51,7 @@ def connected_components(
     labels = (
         sym.select(F.col("u").alias("id")).distinct().withColumn("label", F.col("id"))
     )
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         nb_min = (
             sym.join(labels.select(F.col("id").alias("u"), "label"), "u")
             .select(F.col("v").alias("id"), F.col("label"))
@@ -65,4 +70,8 @@ def connected_components(
         labels = merged.select("id", "label")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after {MAX_ROUNDS} rounds"
+        )
     return labels.select("id", F.col("label").alias("component"))

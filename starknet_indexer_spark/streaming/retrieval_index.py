@@ -591,7 +591,6 @@ def stream_retrieval_index(
     schema=None,
     max_files_per_trigger: int = 1,
     compact_every_batches: int | None = COMPACT_EVERY_BATCHES,
-    compact_tier_max_bytes: int = COMPACT_TIER_MAX_BYTES,
 ):
     """Structured Streaming driver: document rows arriving in
     ``feed_dir`` maintain the inverted index per micro-batch, and a
@@ -607,9 +606,7 @@ def stream_retrieval_index(
         if compact_every_batches:
             epoch = int(token.rsplit(":", 1)[1])
             if epoch > 0 and epoch % compact_every_batches == 0:
-                compact_segments(
-                    spark, root, tier_max_bytes=compact_tier_max_bytes
-                )
+                compact_segments(spark, root, tier_max_bytes=COMPACT_TIER_MAX_BYTES)
 
     return state_table.stream_maintain_with(
         spark,

@@ -8,6 +8,7 @@ surface out.
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -284,16 +285,42 @@ def test_ingest_family_threads_carry_the_job_group(spark, tmp_path):
 
 
 def test_refresh_operational_writes_carry_the_job_group(spark, partial_tables_dir, tmp_path):
-    """The concurrent view writes run in the caller's job group."""
+    """The view builds and writes of both tiers run on pool threads in
+    the caller's job group, the eager ``since`` lookup of an
+    incremental analytical refresh's hourly builds included."""
+    import datetime
+
     from starknet_indexer_spark.daemon import load_tables
 
     from .jobs import job_group
 
     tables = load_tables(spark, partial_tables_dir)
-    with job_group(spark.sparkContext, "refresh-operational") as jobs:
-        runtime.refresh_operational(tables, str(tmp_path / "views"))
+    out = str(tmp_path / "views")
+    as_of = tables["blocks"].agg(F.max("time")).collect()[0][0]
+    with job_group(spark.sparkContext, "refresh-both-tiers") as jobs:
+        runtime.refresh_operational(tables, out)
+        runtime.refresh_analytical(
+            spark, tables, out, as_of, since=as_of - datetime.timedelta(hours=2)
+        )
     assert jobs["grouped"]
     assert jobs["ungrouped"] == set()
+
+
+def _snapshot(spark, out, name):
+    """The part-file names and digest of one written view. Part-file
+    names carry the writing job's id, so a rewrite with the same
+    content still shows as a new snapshot."""
+    path = os.path.join(out, name)
+    return sorted(os.listdir(path)), _view_digest(spark, path)
+
+
+def _prior_snapshots(spark, tmp_path, out):
+    """Write every operational view over no tables at all under
+    ``out`` and return their snapshots."""
+    from starknet_indexer_spark.daemon import load_tables
+
+    runtime.refresh_operational(load_tables(spark, str(tmp_path / "none")), out)
+    return {n: _snapshot(spark, out, n) for n in runtime.OPERATIONAL}
 
 
 def test_failed_view_write_leaves_every_view_whole(
@@ -308,16 +335,7 @@ def test_failed_view_write_leaves_every_view_whole(
     from starknet_indexer_spark.views import VIEWS
 
     out = str(tmp_path / "views")
-
-    def snapshot(name):
-        # part-file names carry the writing job's id, so a rewrite with
-        # the same content still shows as a new snapshot
-        path = os.path.join(out, name)
-        return sorted(os.listdir(path)), _view_digest(spark, path)
-
-    # the prior snapshots: every view over no tables at all
-    runtime.refresh_operational(load_tables(spark, str(tmp_path / "none")), out)
-    prior = {n: snapshot(n) for n in runtime.OPERATIONAL}
+    prior = _prior_snapshots(spark, tmp_path, out)
 
     def failing(tables):
         return spark.range(1).select(
@@ -328,7 +346,7 @@ def test_failed_view_write_leaves_every_view_whole(
     with pytest.raises(PySparkException, match="view write failed"):
         runtime.refresh_operational(load_tables(spark, partial_tables_dir), out)
     assert not [e for e in os.listdir(out) if e.endswith(".staging")]
-    after = {n: snapshot(n) for n in runtime.OPERATIONAL}
+    after = {n: _snapshot(spark, out, n) for n in runtime.OPERATIONAL}
     assert after.pop("oracle_pool_states") == prior["oracle_pool_states"]
     for name, (files, digest) in after.items():
         assert files != prior[name][0], name  # the new snapshot
@@ -336,3 +354,170 @@ def test_failed_view_write_leaves_every_view_whole(
             assert digest[0] >= 1 and digest != prior[name][1]
         else:
             assert digest == prior[name][1], name  # empty before and after
+
+
+def _raised_within(seconds, fn, *args):
+    """Run ``fn(*args)`` on a daemon thread and return what it raised
+    (None if nothing); fail if it has not returned within ``seconds``,
+    so a refresh that never finishes fails the test instead of hanging
+    it."""
+    raised = []
+
+    def run():
+        try:
+            fn(*args)
+        except Exception as e:
+            raised.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"still running after {seconds} s"
+    return raised[0] if raised else None
+
+
+def test_view_builds_overlap_the_writes(spark, partial_tables_dir, tmp_path, monkeypatch):
+    """Each view is built on the thread that writes it, so a view's
+    build can wait for another view's write to finish. Built in order
+    before every write, the build below would wait out its timeout."""
+    from starknet_indexer_spark.daemon import load_tables
+    from starknet_indexer_spark.views import VIEWS
+
+    written = threading.Event()
+    waited = []
+    swap_in, build = runtime._swap_in, VIEWS["pool_states"]
+
+    def signalling_swap_in(df, out_dir):
+        swap_in(df, out_dir)
+        if os.path.basename(out_dir) == "spline_pools":
+            written.set()
+
+    def waiting_build(tables):
+        waited.append(written.wait(timeout=60))
+        return build(tables)
+
+    monkeypatch.setattr(runtime, "_swap_in", signalling_swap_in)
+    monkeypatch.setitem(VIEWS, "pool_states", waiting_build)
+    tables = load_tables(spark, partial_tables_dir)
+    runtime.refresh_operational(tables, str(tmp_path / "views"))
+    assert waited == [True]  # built once, after another view's write
+
+
+def test_failed_upstream_build_fails_only_its_dependents(
+    spark, partial_tables_dir, tmp_path, monkeypatch
+):
+    """``pool_states`` raises while its plan is built: the refresh
+    re-raises that error in bounded time (its dependents fail with it
+    rather than wait), leaves no staging dir, ``pool_states`` and its
+    three dependents keep their prior snapshots and the three
+    independent views hold new ones."""
+    from starknet_indexer_spark.daemon import load_tables
+    from starknet_indexer_spark.views import VIEWS
+
+    out = str(tmp_path / "views")
+    prior = _prior_snapshots(spark, tmp_path, out)
+    tables = load_tables(spark, partial_tables_dir)
+
+    def failing(tables):
+        raise RuntimeError("pool_states build failed")
+
+    monkeypatch.setitem(VIEWS, "pool_states", failing)
+    error = _raised_within(300, runtime.refresh_operational, tables, out)
+    assert isinstance(error, RuntimeError), error
+    assert str(error) == "pool_states build failed"
+    assert not [e for e in os.listdir(out) if e.endswith(".staging")]
+    failed = {
+        "pool_states",
+        "twamm_pool_states",
+        "twamm_sale_rate_deltas",
+        "limit_order_pool_states",
+    }
+    for name in runtime.OPERATIONAL:
+        files, digest = _snapshot(spark, out, name)
+        if name in failed:
+            assert (files, digest) == prior[name], name
+        else:
+            assert files != prior[name][0], name  # the new snapshot
+
+
+def test_refresh_leaves_no_cached_relation(spark, partial_tables_dir, tmp_path, monkeypatch):
+    """The two views cached for their dependents leave the session's
+    cache manager after a successful refresh and after a failed one."""
+    from starknet_indexer_spark.daemon import load_tables
+    from starknet_indexer_spark.views import VIEWS
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    built = []
+
+    def recording(view):
+        def build(*args):
+            built.append(view(*args))
+            return built[-1]
+
+        return build
+
+    for name in ("pool_states", "twamm_pool_states"):
+        monkeypatch.setitem(VIEWS, name, recording(VIEWS[name]))
+
+    def assert_uncached():
+        assert len(built) == 2
+        assert cache.numCachedEntries() == before
+        assert not [df for df in built if cache.lookupCachedData(df._jdf).isDefined()]
+        built.clear()
+
+    tables = load_tables(spark, partial_tables_dir)
+    runtime.refresh_operational(tables, str(tmp_path / "ok"))
+    assert_uncached()
+
+    def failing(tables, twamm_states):
+        raise RuntimeError("dependent build failed")
+
+    monkeypatch.setitem(VIEWS, "twamm_sale_rate_deltas", failing)
+    with pytest.raises(RuntimeError, match="dependent build failed"):
+        runtime.refresh_operational(tables, str(tmp_path / "failed"))
+    assert_uncached()
+
+
+def test_once_builds_once_under_contention():
+    """Many more threads than cores call one ``_Once`` at a fast switch
+    interval: the builder runs once, every caller gets its result, and
+    with a failing builder every caller gets the one error it raised."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    def hammer(memo, n=32):
+        def call():
+            try:
+                return memo()
+            except RuntimeError as e:
+                return e
+
+        with ThreadPoolExecutor(max_workers=n) as pool:
+            futures = [pool.submit(call) for _ in range(n)]
+            return [f.result(timeout=60) for f in futures]
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        time.sleep(0.01)  # widen the window a second build would need
+        return object()
+
+    def failing():
+        calls.append(1)
+        raise RuntimeError("build failed")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        got = hammer(runtime._Once(build))
+        assert len(calls) == 1 and len({id(g) for g in got}) == 1
+        calls.clear()
+        errors = hammer(runtime._Once(failing))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(calls) == 1
+    assert len({id(e) for e in errors}) == 1
+    assert isinstance(errors[0], RuntimeError)

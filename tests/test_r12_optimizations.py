@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from starknet_indexer_spark.queries.pipeline_pca import _tdiv
@@ -154,6 +155,20 @@ class TestConnectedComponentsRestructure:
             (20, 20), (21, 20), (22, 20),
         }
         assert got == want
+
+    def test_unconverged_bound_raises(self, spark, monkeypatch):
+        """Labels still changing when the round bound is reached raise
+        instead of being returned as components; a bound one round past
+        the farthest node's distance from the minimum converges."""
+        from starknet_indexer_spark.operators import graph
+
+        edges = spark.createDataFrame([(1, 2), (2, 3)], "u BIGINT, v BIGINT")
+        monkeypatch.setattr(graph, "MAX_ROUNDS", 1)
+        with pytest.raises(RuntimeError, match="still changing after 1 rounds"):
+            graph.connected_components(edges)
+        monkeypatch.setattr(graph, "MAX_ROUNDS", 3)
+        got = {(r.id, r.component) for r in graph.connected_components(edges).collect()}
+        assert got == {(1, 1), (2, 1), (3, 1)}
 
 
 class TestAnnKernelEquality:
