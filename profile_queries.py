@@ -10,7 +10,11 @@ A/B config experiments don't need a full 141-query bench run.
 Usage:
   python profile_queries.py [--sf DIR] [--plans OUTDIR] [--runs N]
                             [--conf k=v ...] [--tag LABEL] q1 q2 ...
-Prints one JSON line per query: {"q": name, "cold": s, "steady": [..]}.
+Prints one JSON line per query: {"q": name, "cold": s, "steady": [..],
+"build_jobs": n}, where ``build_jobs`` counts the Spark jobs the last
+steady call started while building its plan (job group
+``profile-build:<q>:<run>``), before execution: zero once every schema and
+artifact the query reads is resolved.
 """
 
 from __future__ import annotations
@@ -38,6 +42,8 @@ def main() -> int:
     overrides = dict(c.split("=", 1) for c in args.conf)
     from starknet_indexer_spark.queries import REGISTRY
     from starknet_indexer_spark.session import get_spark
+
+    from tests.jobs import job_group
 
     spark = get_spark("profile", **overrides)
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -72,13 +78,21 @@ def main() -> int:
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             coldt = round(buildt + time.perf_counter() - t0, 3)
-            steady = []
-            for _ in range(args.runs):
+            steady, build_jobs = [], None
+            for i in range(args.runs):
+                # the job group's listener-bus drains stay outside the timing
+                with job_group(spark.sparkContext, f"profile-build:{name}:{i}") as jobs:
+                    t0 = time.perf_counter()
+                    df = q.fn(spark, args.sf)
+                    dt = time.perf_counter() - t0
+                build_jobs = len(jobs["grouped"])
+                spark.sparkContext.setJobDescription(f"profile:{name}")
                 t0 = time.perf_counter()
-                q.fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-                steady.append(round(time.perf_counter() - t0, 3))
+                df.write.format("noop").mode("overwrite").save()
+                steady.append(round(dt + time.perf_counter() - t0, 3))
             rec = {"q": name, "cold": coldt, "build": buildt, "steady": steady,
-                   "median": sorted(steady)[len(steady) // 2]}
+                   "median": sorted(steady)[len(steady) // 2],
+                   "build_jobs": build_jobs}
             if args.tag:
                 rec["tag"] = args.tag
             results.append(rec)

@@ -10,12 +10,29 @@ parquet files partitioned on its natural pruning key (facts:
 date/block-range; events: event date). `spark.read.parquet(dir)`
 with a filter on the partition column prunes at the source. The
 sf* test dirs are single files, so the same code path works unchanged.
+
+Schema memo: a plain ``spark.read.parquet(path)`` infers the schema
+from the parquet footers, and that inference is a Spark job (~90 ms
+on the 4-core VM, even for one file) every time a query plan is
+built. ``read_parquet`` infers once and then reads with the memoized
+``StructType`` (``spark.read.schema(s).parquet(path)``: no job). The
+memo key is the session's ``applicationId``, the path, and each
+parquet file's (name, size, ``st_mtime_ns``) under it, so it misses
+when a file is added, removed or rewritten, and when a new Spark
+application reads the same path. Hidden files (``_SUCCESS``,
+``.crc``), which Spark does not read, are not part of the key. A
+path that is not on the local file system always infers. The memo
+keeps the ``SCHEMA_MEMO_MAX`` newest entries.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -46,10 +63,56 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+#: entries the schema memo keeps (oldest evicted first): each table
+#: and silver relation of a few corpora in a few sessions
+SCHEMA_MEMO_MAX = 256
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def _parquet_files(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """(relative name, size, st_mtime_ns) of every file Spark would
+    read under ``path``, sorted; None when ``path`` is not local."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if f.startswith(("_", ".")):
+                continue
+            fp = os.path.join(root, f)
+            st = os.stat(fp)
+            out.append((os.path.relpath(fp, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    (application, path, file set) and reads with the memoized schema
+    afterwards (module docstring)."""
+    files = _parquet_files(path)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, os.path.abspath(path), files)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMA_MEMO_LOCK:
+        while len(_SCHEMA_MEMO) >= SCHEMA_MEMO_MAX:
+            _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
+        _SCHEMA_MEMO[key] = df.schema
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     # Timestamp normalization — two historical corpus encodings:
     # (a) TIMESTAMP(NANOS) read as epoch-nanos longs under
     #     spark.sql.legacy.parquet.nanosAsLong; convert by INTEGER

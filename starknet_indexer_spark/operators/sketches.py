@@ -41,6 +41,7 @@ KMV would hold k values per group in executor memory; this holds none).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -175,9 +176,10 @@ def bloom_build(
     structure value-hash-checkable.
 
     Scale shape: one map-side explode of k positions per row, one
-    distinct (map-side partially aggregated). ``bloom_probe_hits``
-    collects the relation once into a dense bitset (at most ``m_bits``
-    rows, independent of member count)."""
+    distinct (map-side partially aggregated). The result is lazy;
+    ``bloom_bitset`` collects it into the packed bitset that
+    ``bloom_probe_hits`` probes (at most ``m_bits`` rows, independent
+    of member count)."""
     rows = df.select(
         F.explode(
             F.array(*[cm_bucket_expr(item, i, m_bits) for i in range(k)])
@@ -186,43 +188,19 @@ def bloom_build(
     return rows.distinct()
 
 
-def bloom_probe_hits(
-    probes: DataFrame,
-    item: Column,
-    bits: DataFrame,
-    k: int,
-    m_bits: int,
-    out_col: str = "bloom_hit",
-) -> DataFrame:
-    """Append ``out_col`` (boolean: all k bit positions of ``item``
-    are set) to ``probes``, ONE output row per input row (duplicate
-    probe rows each keep their own row). No false negatives — a
-    member's bits were all set at build time by construction; false
-    positives occur when all k positions collide with other members'
-    bits, at the textbook ``(1 - e^(-k*n/m))^k`` rate, deterministically
-    shared across engines.
+def bloom_bitset(bits: DataFrame, m_bits: int) -> np.ndarray:
+    """Collect a set-bit relation (``bloom_build``'s output) into the
+    filter's packed bitset: ``np.packbits`` of ``m_bits`` booleans,
+    ``ceil(m_bits / 8)`` uint8 bytes (128 KiB for the 2^20-bit
+    decontamination filter). This is the one step of a Bloom filter
+    that runs a Spark job, and it does so here, when called.
 
-    The probe is MAP-ONLY against a DENSE BITSET: the set-bit relation
-    — at most ``m_bits`` rows by construction, a size fixed by the
-    filter parameters and independent of corpus scale — is collected
-    ONCE into an in-memory boolean array, and each probe row tests its
-    k bucket positions in one vectorized Arrow UDF. No joins, no
-    broadcast-relation builds, no shuffle. A NULL item hashes to NULL
-    buckets, which are coalesced onto a sentinel position that is never
-    set, so it never hits. A NULL item on the BUILD side yields a NULL
-    ``bit`` row, which sets nothing; the bitset collect drops it.
-
-    Building the bitset runs a Spark job (the collect of ``bits``)
-    when this function is called, not when the returned DataFrame is
-    evaluated, and raises ``ValueError`` when ``bits`` holds more than
-    ``m_bits`` set positions (not a set-bit relation built with these
-    parameters)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
+    A NULL ``bit`` row (a NULL item on the build side) sets nothing and
+    is dropped. Raises ``ValueError`` when ``bits`` holds more than
+    ``m_bits`` rows or a position outside ``[0, m_bits)``: not a
+    set-bit relation built with these parameters."""
     # control-plane collect, bounded by the filter parameter (the
-    # relation is DISTINCT bit positions < m_bits — e.g. 2^20 rows
-    # / 1 MiB max for the decontamination filter) — NOT by corpus
+    # relation is DISTINCT bit positions < m_bits), NOT by corpus
     # size; the same boundedness argument as the k-means centroid
     # collects (annkernels._collect_matrix)
     bit_rows = (
@@ -235,16 +213,61 @@ def bloom_probe_hits(
             f"bloom bits relation has {len(bit_rows)} rows > m_bits="
             f"{m_bits}: not a valid set-bit relation"
         )
-    # index m_bits is the never-set sentinel for NULL buckets
-    bitset = np.zeros(m_bits + 1, dtype=bool)
-    if len(bit_rows):
-        bitset[bit_rows] = True
+    if len(bit_rows) and (bit_rows.min() < 0 or bit_rows.max() >= m_bits):
+        raise ValueError(
+            f"bloom bits relation has a position outside [0, m_bits="
+            f"{m_bits}): not a valid set-bit relation"
+        )
+    dense = np.zeros(m_bits, dtype=bool)
+    dense[bit_rows] = True
+    return np.packbits(dense)
+
+
+def bloom_probe_hits(
+    probes: DataFrame,
+    item: Column,
+    bitset: np.ndarray,
+    k: int,
+    m_bits: int,
+    out_col: str = "bloom_hit",
+) -> DataFrame:
+    """Append ``out_col`` (boolean: all k bit positions of ``item``
+    are set) to ``probes``, ONE output row per input row (duplicate
+    probe rows each keep their own row). ``bitset`` is the packed
+    filter ``bloom_bitset`` returns (or one loaded from a stored
+    artifact). No false negatives — a member's bits were all set at
+    build time by construction; false positives occur when all k
+    positions collide with other members' bits, at the textbook
+    ``(1 - e^(-k*n/m))^k`` rate, deterministically shared across
+    engines.
+
+    The probe is MAP-ONLY: each probe row tests its k bucket positions
+    against the packed bitset in one vectorized Arrow UDF, whose
+    closure carries the ``ceil(m_bits / 8)`` bytes. No joins, no
+    broadcast-relation builds, no shuffle, and no Spark job runs when
+    this function is called. A NULL item hashes to NULL buckets, which
+    are coalesced onto the position ``m_bits``, one past the filter,
+    which is never set, so it never hits. Raises ``ValueError`` when
+    ``bitset`` is not ``ceil(m_bits / 8)`` uint8 bytes."""
+    from pyspark.sql.functions import pandas_udf
+
+    bitset = np.asarray(bitset)
+    if bitset.dtype != np.uint8 or bitset.shape != ((m_bits + 7) // 8,):
+        raise ValueError(
+            f"bloom bitset has shape {bitset.shape} and dtype {bitset.dtype}; "
+            f"m_bits={m_bits} needs {(m_bits + 7) // 8} uint8 bytes"
+        )
+    # one zero byte past the end holds the NULL sentinel position
+    # m_bits when m_bits is a multiple of 8; otherwise it falls in the
+    # last byte's padding, which packbits leaves zero
+    table = np.append(bitset, np.uint8(0))
 
     @pandas_udf("boolean")
     def _all_set(buckets: pd.DataFrame) -> pd.Series:
         hit = None
         for c in buckets.columns:
-            h = bitset[buckets[c].to_numpy(dtype=np.int64)]
+            b = buckets[c].to_numpy(dtype=np.int64)
+            h = ((table[b >> 3] >> (7 - (b & 7))) & 1).astype(bool)
             hit = h if hit is None else (hit & h)
         return pd.Series(hit)
 

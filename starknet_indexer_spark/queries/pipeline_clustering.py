@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, read_parquet
 from ..operators.clustering import QUANT_SCALE, quantize_expr
 from .registry import register
 
@@ -71,7 +71,7 @@ def load_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     root = ensure_kmeans_centroids(spark, sf_dir)
-    return spark.read.parquet(_os.path.join(root, "centroids"))
+    return read_parquet(spark, _os.path.join(root, "centroids"))
 
 
 _D2_SQL = (

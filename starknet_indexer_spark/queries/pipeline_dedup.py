@@ -14,10 +14,11 @@ touches only the candidate pairs — a vanishing fraction of N^2.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, read_parquet
 from ..operators.dedup import (
     MINHASH_P,
     MINHASH_PARAMS,
@@ -202,8 +203,8 @@ def minhash_lsh_dedup_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..silver import ensure_silver
 
     root = ensure_silver(spark, sf_dir)
-    sh = spark.read.parquet(os.path.join(root, "doc_shingles"))
-    bands = spark.read.parquet(os.path.join(root, "minhash_bands"))
+    sh = read_parquet(spark, os.path.join(root, "doc_shingles"))
+    bands = read_parquet(spark, os.path.join(root, "minhash_bands"))
     return _verify_candidates(lsh_candidate_pairs(bands), sh)
 
 
@@ -543,6 +544,55 @@ def _bloom_oracle() -> str:
     """
 
 
+#: artifact tag of the stored decontamination Bloom filter
+BLOOM_ARTIFACT = "decontam_bloom"
+
+
+def bloom_params(k: int, m_bits: int) -> str:
+    """The stored filter's artifact params, also used verbatim by the
+    key tests: both filter parameters and the silver derivation
+    version, since the filter is built from the silver decontam_grams
+    relation (the same reason setjoin_pairs folds it in)."""
+    from ..silver import SILVER_VERSION
+
+    return f"k={k}:m={m_bits}:silver={SILVER_VERSION}"
+
+
+def decontam_bloom_bits(
+    spark: SparkSession, sf_dir: str, k: int, m_bits: int
+) -> np.ndarray:
+    """The train split's packed Bloom bitset (``sketches.bloom_bitset``)
+    as a content-keyed artifact: built once from the silver
+    decontam_grams relation, stored as ``bits.npy`` through
+    ``silver.ensure_artifact`` (key: documents.parquet content, k,
+    m_bits, SILVER_VERSION), and loaded with no Spark job afterwards.
+    The filter is a pure function of the train split, so at deployment
+    it is refreshed with the corpus, not rebuilt on every screen."""
+    import os
+
+    from ..operators.sketches import bloom_bitset, bloom_build
+    from ..silver import ensure_artifact, ensure_silver
+
+    def write(d: str) -> None:
+        root = ensure_silver(spark, sf_dir)
+        grams = read_parquet(spark, os.path.join(root, "decontam_grams"))
+        # no .distinct() on the train side (r13): bloom_build's own
+        # set-bit distinct already dedups — the same filter bits come
+        # out whether gh rows repeat or not
+        train = grams.filter(F.col("source") != EVAL_SOURCE).select("gh")
+        bits = bloom_build(train, F.col("gh").cast("string"), k, m_bits)
+        os.makedirs(d, exist_ok=True)
+        np.save(os.path.join(d, "bits.npy"), bloom_bitset(bits, m_bits))
+
+    d = ensure_artifact(
+        os.path.join(sf_dir, "documents.parquet"),
+        BLOOM_ARTIFACT,
+        bloom_params(k, m_bits),
+        write,
+    )
+    return np.load(os.path.join(d, "bits.npy"))
+
+
 @register(
     "bloom_decontamination",
     oracle=_bloom_oracle(),
@@ -556,37 +606,37 @@ def _bloom_oracle() -> str:
     "hit is flagged — pinned against the exact join in "
     "tests/test_operators.py); false positives are deterministic "
     "md5-collision artifacts both engines share bit-for-bit, so the "
-    "approximate answer itself value-hash-checks. Scale shape: the "
-    "filter is O(m) bits regardless of train cardinality — it "
-    "broadcasts where the exact train n-gram relation (the "
-    "decontamination join's build side) would need a shuffle join; "
-    "probing is map-only against the broadcast bit set.",
+    "approximate answer itself value-hash-checks. The filter is a "
+    "stored artifact (decontam_bloom_bits: packed bits, 128 KiB, "
+    "keyed on the corpus content, k, m and the silver version), "
+    "built once from the silver decontam_grams relation; each call "
+    "loads it and derives the eval grams, the probe and the per-doc "
+    "counts live. Scale shape: the filter is O(m) bits regardless of "
+    "train cardinality — it ships inside the probe where the exact "
+    "train n-gram relation (the decontamination join's build side) "
+    "would need a shuffle join; probing is map-only.",
 )
 def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..operators.sketches import bloom_build, bloom_probe_hits
+    from ..operators.sketches import bloom_probe_hits
     from ..silver import ensure_silver
 
     # read the MATERIALIZED silver decontam_grams relation instead of
     # re-deriving hashed 5-grams from raw text (same reroute as the
     # setjoin family, VERDICT r8 mandate #3); the DuckDB oracle still
-    # derives from raw text, so every run re-proves the silver
-    # derivation. Both probe sides are DISTINCT'd below, which absorbs
-    # the duplicate rows a crashed incremental silver append can leave.
+    # derives bits and grams from raw text, so every run re-proves the
+    # silver derivation and the stored filter. The eval side is
+    # DISTINCT'd below, which absorbs the duplicate rows a crashed
+    # incremental silver append can leave.
+    bitset = decontam_bloom_bits(spark, sf_dir, BLOOM_K, BLOOM_M_BITS)
     root = ensure_silver(spark, sf_dir)
-    grams = spark.read.parquet(os.path.join(root, "decontam_grams"))
-    # no .distinct() on the train side (r13): bloom_build's own set-bit
-    # distinct already dedups — the same filter bits come out whether
-    # gh rows repeat or not, so the pre-distinct was a pure extra
-    # shuffle of the train gram relation
-    train = grams.filter(F.col("source") != EVAL_SOURCE).select("gh")
-    bits = bloom_build(train, F.col("gh").cast("string"), BLOOM_K, BLOOM_M_BITS)
+    grams = read_parquet(spark, os.path.join(root, "decontam_grams"))
     ev = grams.filter(F.col("source") == EVAL_SOURCE).select("doc_id", "gh").distinct()
-    # map-only probe against the dense bitset (one vectorized Arrow
+    # map-only probe against the packed bitset (one vectorized Arrow
     # membership test per row; no joins, no broadcast builds)
     hits = bloom_probe_hits(
-        ev, F.col("gh").cast("string"), bits, BLOOM_K, BLOOM_M_BITS
+        ev, F.col("gh").cast("string"), bitset, BLOOM_K, BLOOM_M_BITS
     )
     return hits.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_ngrams"),
@@ -964,7 +1014,7 @@ def decontamination_ngram_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..silver import ensure_silver
 
     root = ensure_silver(spark, sf_dir)
-    grams = spark.read.parquet(os.path.join(root, "decontam_grams"))
+    grams = read_parquet(spark, os.path.join(root, "decontam_grams"))
     train = grams.filter(F.col("source") != EVAL_SOURCE).select("gh").distinct()
     # The eval-side DISTINCT on (doc_id, gh) would also collapse a
     # WITHIN-doc 60-bit md5 collision the re-deriving twin counts as
@@ -1070,8 +1120,8 @@ def fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..silver import ensure_silver
 
     root = ensure_silver(spark, sf_dir)
-    sh = spark.read.parquet(os.path.join(root, "doc_shingles"))
-    bands = spark.read.parquet(os.path.join(root, "minhash_bands"))
+    sh = read_parquet(spark, os.path.join(root, "doc_shingles"))
+    bands = read_parquet(spark, os.path.join(root, "minhash_bands"))
     eval_ids = (
         load(spark, sf_dir, "documents")
         .filter(F.col("source") == EVAL_SOURCE)

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..catalog import load
+from ..catalog import load, read_parquet
 from ..operators.clustering import (
     QUANT_SCALE,
     attach_codebook_broadcasts,
@@ -553,7 +553,7 @@ def _split_books(
     ``createDataFrame`` relations was measured 2-2.5x slower (r13).
     Schema (and so every dtype the LUT map keys / kernel matrices
     see) is preserved verbatim from the parquet."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
 
     def local(b: int) -> DataFrame:
         return df.filter(F.col("book") == b).drop("book")

@@ -35,6 +35,8 @@ from fractions import Fraction
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..catalog import read_parquet
 from ..operators.dedup import (
     cap_hot_bands,
     md5_hash60_expr,
@@ -341,7 +343,7 @@ def _silver_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle strings: ranked_sets consumes h directly and never
     # re-runs the md5 pass; Catalyst prunes the unused string column
     # from the scan
-    return spark.read.parquet(os.path.join(root, "doc_shingles")).select(
+    return read_parquet(spark, os.path.join(root, "doc_shingles")).select(
         "doc_id", F.col("shingles").alias("toks"), "h"
     )
 
@@ -501,7 +503,7 @@ def ensure_exact_pairs(spark: SparkSession, sf_dir: str, t: float) -> DataFrame:
         f"t={num}/{den}:{SETJOIN_PAIRS_VERSION}:silver={SILVER_VERSION}",
         writer,
     )
-    return spark.read.parquet(os.path.join(root, "pairs"))
+    return read_parquet(spark, os.path.join(root, "pairs"))
 
 
 # -- asymmetric containment join ------------------------------------

@@ -16,20 +16,20 @@ One maintained relation powers two deployment-shaped probes:
 - ``exact_containment``: the decontamination_ngram join against the
   maintained gram set (exact, shuffle join at scale).
 - ``bloom_screen``: derive the k-hash Bloom SET-BIT relation from the
-  gram state (map-only explode + distinct) and probe broadcast-side —
-  the bloom_decontamination query with the filter's build side coming
-  from the stream instead of a corpus rescan. Deriving bits at read
-  time (rather than maintaining a bit-level state) keeps the state
-  exact: cnt supports retraction, and stream==batch holds for the
-  downstream BITSET by construction because OR-folding distincts is
-  order-insensitive.
+  gram state (map-only explode + distinct), collect it into the packed
+  bitset, and probe map-only — the bloom_decontamination query with
+  the filter's build side coming from the stream instead of the stored
+  corpus artifact. Deriving bits at read time (rather than maintaining
+  a bit-level state) keeps the state exact: cnt supports retraction,
+  and stream==batch holds for the downstream BITSET by construction
+  because OR-folding distincts is order-insensitive.
 
 At 100 TB this is the live-benchmark-protection shape: eval suites
 are fixed, the training feed grows continuously, and every new batch
 must be screened against the train history WITHOUT rescanning it —
 exactly what an incrementally maintained gram index provides. The
 Bloom derivation is O(m) bits regardless of state cardinality and
-broadcasts to any scoring job.
+ships inside any scoring job's probe.
 """
 
 from __future__ import annotations
@@ -125,14 +125,19 @@ def bloom_screen(
     spark: SparkSession, state_dir: str, docs: DataFrame
 ) -> DataFrame:
     """bloom_decontamination with the filter built from the maintained
-    gram state: derive the set-bit relation (map-only, <= 2^20 rows)
-    and probe each eval doc's distinct grams against the broadcast
-    bits. Identical output to the registered batch query once the full
-    train split has folded."""
-    from ..operators.sketches import bloom_build, bloom_probe_hits
+    gram state: derive the set-bit relation (map-only, <= 2^20 rows),
+    collect it into the packed bitset (one Spark job, when called: the
+    state changes every epoch, so there is no stored artifact), and
+    probe each eval doc's distinct grams against it. Identical output
+    to the registered batch query once the full train split has
+    folded."""
+    from ..operators.sketches import bloom_bitset, bloom_build, bloom_probe_hits
 
     train = read_train_grams(spark, state_dir)
-    bits = bloom_build(train, F.col("gh").cast("string"), BLOOM_K, BLOOM_M_BITS)
+    bitset = bloom_bitset(
+        bloom_build(train, F.col("gh").cast("string"), BLOOM_K, BLOOM_M_BITS),
+        BLOOM_M_BITS,
+    )
     ev = (
         build_decontam_grams(docs)
         .filter(F.col("source") == EVAL_SOURCE)
@@ -142,7 +147,7 @@ def bloom_screen(
     # same map-only bitset probe as the registered batch query
     # (shared-code equality)
     hits = bloom_probe_hits(
-        ev, F.col("gh").cast("string"), bits, BLOOM_K, BLOOM_M_BITS
+        ev, F.col("gh").cast("string"), bitset, BLOOM_K, BLOOM_M_BITS
     )
     return hits.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_ngrams"),

@@ -6,6 +6,7 @@ well-formed.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from starknet_indexer_spark.catalog import load
@@ -871,12 +872,15 @@ class TestBloomFilter:
         and each duplicate keeps its own output row (one output row
         per input row)."""
         from starknet_indexer_spark.operators.sketches import (
+            bloom_bitset,
             bloom_build,
             bloom_probe_hits,
         )
 
         members = spark.createDataFrame([("a",), ("b",)], "item string")
-        bits = bloom_build(members, F.col("item"), k=4, m_bits=1 << 16)
+        bits = bloom_bitset(
+            bloom_build(members, F.col("item"), k=4, m_bits=1 << 16), 1 << 16
+        )
         probes = spark.createDataFrame(
             [("a",), ("a",), ("zzz-nonmember",)], "item string"
         )
@@ -891,17 +895,21 @@ class TestBloomFilter:
         """Empty probes give an empty result with the hit column; an
         empty ``bits`` relation (nothing was a member) flags no row;
         a NULL probe item is never a hit; a one-row probe gives one
-        row."""
+        row; a bitset of the wrong size raises."""
         from starknet_indexer_spark.operators.sketches import (
+            bloom_bitset,
             bloom_build,
             bloom_probe_hits,
         )
 
         m_bits = 1 << 10
         members = spark.createDataFrame([("a",)], "item string")
-        bits = bloom_build(members, F.col("item"), k=3, m_bits=m_bits)
-        no_bits = bloom_build(
-            members.limit(0), F.col("item"), k=3, m_bits=m_bits
+        bits = bloom_bitset(
+            bloom_build(members, F.col("item"), k=3, m_bits=m_bits), m_bits
+        )
+        no_bits = bloom_bitset(
+            bloom_build(members.limit(0), F.col("item"), k=3, m_bits=m_bits),
+            m_bits,
         )
 
         empty = bloom_probe_hits(
@@ -929,6 +937,10 @@ class TestBloomFilter:
             members, F.col("item"), bits, k=3, m_bits=m_bits
         ).collect()
         assert [(r["item"], r["bloom_hit"]) for r in one] == [("a", True)]
+
+        # a bitset packed for another m_bits is refused, not misread
+        with pytest.raises(ValueError, match=f"m_bits={m_bits}"):
+            bloom_probe_hits(probes, F.col("item"), bits[:-1], k=3, m_bits=m_bits)
 
 
 class TestCountMinSketch:

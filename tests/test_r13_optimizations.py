@@ -18,6 +18,7 @@ class TestBloomBitsetProbe:
         NULL item (never a hit). A NULL member yields a NULL ``bit``
         row, which the bitset collect must skip."""
         from starknet_indexer_spark.operators.sketches import (
+            bloom_bitset,
             bloom_build,
             bloom_probe_hits,
         )
@@ -38,7 +39,7 @@ class TestBloomBitsetProbe:
         fast = {
             r["item"]: r["bloom_hit"]
             for r in bloom_probe_hits(
-                probes, F.col("item"), bits, k=4, m_bits=1 << 12
+                probes, F.col("item"), bloom_bitset(bits, 1 << 12), k=4, m_bits=1 << 12
             ).collect()
         }
         slow = {
@@ -52,12 +53,17 @@ class TestBloomBitsetProbe:
         assert all(fast[f"m{i}"] for i in range(0, 200, 3))
 
     def test_oversized_bits_relation_raises(self, spark):
-        """More set positions than ``m_bits`` cannot come from
-        bloom_build with these parameters: an explicit ValueError,
-        not an assert that ``python -O`` strips."""
-        from starknet_indexer_spark.operators.sketches import bloom_probe_hits
+        """More set positions than ``m_bits``, or a position outside
+        ``[0, m_bits)``, cannot come from bloom_build with these
+        parameters: an explicit ValueError, not an assert that
+        ``python -O`` strips."""
+        from starknet_indexer_spark.operators.sketches import bloom_bitset
 
         bits = spark.range(9).select(F.col("id").alias("bit"))
-        probes = spark.createDataFrame([("a",)], "item string")
         with pytest.raises(ValueError, match="m_bits=8"):
-            bloom_probe_hits(probes, F.col("item"), bits, k=2, m_bits=8)
+            bloom_bitset(bits, m_bits=8)
+        # a position outside [0, m_bits) would set a wrapped or
+        # out-of-range bit instead
+        for pos in (-1, 8):
+            with pytest.raises(ValueError, match="m_bits=8"):
+                bloom_bitset(spark.range(1).select(F.lit(pos).cast("bigint").alias("bit")), m_bits=8)
